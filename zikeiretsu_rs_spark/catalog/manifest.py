@@ -184,7 +184,7 @@ class Manifest:
         (the reference's own TODO acknowledges this), and the expansion
         guarantees the pruned file set contains every row inside the
         bound. Callers still verify sufficiency against the data (see
-        translator._manifest_limit_bound)."""
+        translator._apply_limit)."""
         if not entries or n <= 0:
             return list(entries)
         order = list(reversed(entries)) if tail else list(entries)

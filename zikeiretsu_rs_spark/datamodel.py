@@ -28,17 +28,22 @@ class FieldType(Enum):
     VACANT = "vacant"
 
     def spark_type(self) -> T.DataType:
-        return _SPARK_TYPES[self]
+        return _SPARK_TYPES[self][0]
+
+    def byte_width(self) -> int:
+        """In-memory bytes of one value: Spark's defaultSize of the
+        type (a string counts 20)."""
+        return _SPARK_TYPES[self][1]
 
 
 _SPARK_TYPES = {
-    FieldType.FLOAT64: T.DoubleType(),
-    FieldType.BOOL: T.BooleanType(),
-    FieldType.STRING: T.StringType(),
-    FieldType.UINT64: T.LongType(),
-    FieldType.TIMESTAMP_NANO: T.LongType(),
-    FieldType.TIMESTAMP_SEC: T.LongType(),
-    FieldType.VACANT: T.NullType(),
+    FieldType.FLOAT64: (T.DoubleType(), 8),
+    FieldType.BOOL: (T.BooleanType(), 1),
+    FieldType.STRING: (T.StringType(), 20),
+    FieldType.UINT64: (T.LongType(), 8),
+    FieldType.TIMESTAMP_NANO: (T.LongType(), 8),
+    FieldType.TIMESTAMP_SEC: (T.LongType(), 8),
+    FieldType.VACANT: (T.NullType(), 1),
 }
 
 TS_COLUMN = "ts"

@@ -210,10 +210,13 @@ def format_rfc3339_nanos(ts_nanos: int, offset_seconds: int) -> str:
     local = ts_nanos + offset_seconds * NANOS_PER_SEC
     secs, nanos = divmod(local, NANOS_PER_SEC)
     dt = datetime(1970, 1, 1) + timedelta(seconds=secs)
+    return f"{dt.strftime('%Y-%m-%dT%H:%M:%S')}.{nanos:09d}{rfc3339_offset_suffix(offset_seconds)}"
+
+
+def rfc3339_offset_suffix(offset_seconds: int) -> str:
+    """The explicit `±HH:MM` offset suffix of an RFC3339 rendering."""
     if offset_seconds == 0:
-        suffix = "+00:00"
-    else:
-        sign = "+" if offset_seconds >= 0 else "-"
-        a = abs(offset_seconds)
-        suffix = f"{sign}{a // 3600:02d}:{(a % 3600) // 60:02d}"
-    return f"{dt.strftime('%Y-%m-%dT%H:%M:%S')}.{nanos:09d}{suffix}"
+        return "+00:00"
+    sign = "+" if offset_seconds >= 0 else "-"
+    a = abs(offset_seconds)
+    return f"{sign}{a // 3600:02d}:{(a % 3600) // 60:02d}"

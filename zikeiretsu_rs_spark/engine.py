@@ -19,12 +19,14 @@ Example (mirrors zikeiretsu/example/persist/src/main.rs:38-76):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog.context import Database, DBContext
 from .catalog.manifest import Manifest
 from .datamodel import DataPoint, FieldType
 from .ingest.writable_store import PersistCondition, WritableStore
+from .query.analyzer import InterpretedQuery
 from .query.executor import QueryExecutor
 
 __all__ = [
@@ -66,3 +68,14 @@ class Engine:
     def execute_to_df(self, query: str, now_nanos: int | None = None) -> DataFrame:
         df, _ = self._executor.execute_to_df(query, now_nanos)
         return df
+
+    def execute_to_arrow(
+        self, query: str, now_nanos: int | None = None
+    ) -> tuple[pa.Table, InterpretedQuery]:
+        """Run a dialect query and collect its answer as an Arrow table,
+        with the interpreted query (for its output condition). Collected
+        straight from Spark's Arrow batches: a pandas hop would turn a
+        nullable long column into float64. The Flight and HTTP servers
+        answer from this."""
+        df, iq = self._executor.execute_to_df(query, now_nanos)
+        return df.toArrow(), iq

@@ -89,12 +89,7 @@ if FLIGHT_AVAILABLE:
                 query = raw.decode("utf-8", errors="replace")
             try:
                 with self._lock:
-                    df, iq = self.engine._executor.execute_to_df(
-                        query, now_nanos
-                    )
-                    table = pa.Table.from_pandas(
-                        df.toPandas(), preserve_index=False
-                    )
+                    table, iq = self.engine.execute_to_arrow(query, now_nanos)
             except Exception as e:  # parse/plan/exec -> INVALID_ARGUMENT
                 # pyarrow maps ArrowInvalid raised in a handler to the
                 # gRPC INVALID_ARGUMENT status (Status::invalid_argument

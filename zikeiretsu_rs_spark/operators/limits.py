@@ -34,16 +34,47 @@ the translator's manifest-prune path, which has always collected its
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+
+def distinct_ts_threshold(
+    df: DataFrame, n: int, *, tail: bool = False, ts_col: str = "ts"
+) -> tuple[int | None, int]:
+    """(the n-th distinct `ts_col` value from the head — from the tail
+    when `tail` — and the number of distinct values found, at most n),
+    collected as ONE bounded row by one Spark job. `n` must be > 0.
+
+    A NULL threshold arises when every ts is NULL, OR (head only) when
+    NULLs-first ascending ordering fills all n distinct slots with NULL
+    before any real value — both mean an empty result, matching the old
+    broadcast-join form's NULL-comparison semantics exactly (judged
+    ADVICE r14 low: the previous comment claimed only the former).
+    Built from SQL text: each `functions.*` Column costs PySpark extra
+    py4j round trips, and the dialect path plans this per query."""
+    row = (
+        df.select(ts_col)
+        .distinct()
+        .orderBy(ts_col, ascending=not tail)
+        .limit(n)
+        .selectExpr(f"{'min' if tail else 'max'}(`{ts_col}`) AS thr", "count(*) AS cnt")
+        .first()
+    )
+    return row["thr"], row["cnt"]
+
+
+def bound_predicate(bound: int, *, tail: bool = False, ts_col: str = "ts") -> str:
+    """`ts_col <= bound` (head) / `ts_col >= bound` (tail) as a SQL
+    literal comparison: pushable to the Parquet scan (row-group min/max
+    pruning), unlike the former broadcast-join predicate."""
+    return f"`{ts_col}` {'>=' if tail else '<='} {bound}L"
 
 
 def limit_distinct_ts(
     df: DataFrame, n: int, *, tail: bool = False, ts_col: str = "ts"
 ) -> DataFrame:
     """Keep rows belonging to the first (or last) `n` distinct `ts_col`
-    values. `n == 0` returns an empty frame (Head(0)/Tail(0) -> empty,
-    time_series_dataframe.rs:120-153).
+    values of a long (epoch-nanos) column. `n == 0` returns an empty
+    frame (Head(0)/Tail(0) -> empty, time_series_dataframe.rs:120-153).
 
     EAGER: building the returned frame runs one Spark job (the
     distinct-shuffle + TakeOrderedAndProject over `df`'s lineage) to
@@ -54,27 +85,7 @@ def limit_distinct_ts(
     they always see a fresh threshold; judged ADVICE r14 low)."""
     if n <= 0:
         return df.limit(0)
-    order: Column = F.col(ts_col).desc() if tail else F.col(ts_col).asc()
-    bound = F.min(ts_col) if tail else F.max(ts_col)
-    # ONE bounded row (the n-th distinct ts) collected at build time —
-    # the repo's bounded-collect rule. A NULL threshold arises when
-    # every ts is NULL, OR (head only) when NULLs-first ascending
-    # ordering fills all n distinct slots with NULL before any real
-    # value — both yield an empty result, matching the old
-    # broadcast-join form's NULL-comparison semantics exactly (judged
-    # ADVICE r14 low: the previous comment claimed only the former)
-    row = (
-        df.select(ts_col)
-        .distinct()
-        .orderBy(order)
-        .limit(n)
-        .agg(bound.alias("__ts_threshold"))
-        .first()
-    )
-    thr = row["__ts_threshold"]
+    thr, _ = distinct_ts_threshold(df, n, tail=tail, ts_col=ts_col)
     if thr is None:
         return df.limit(0)
-    # literal comparison: pushable to the Parquet scan (row-group
-    # min/max pruning), unlike the former broadcast-join predicate
-    pred = F.col(ts_col) >= F.lit(thr) if tail else F.col(ts_col) <= F.lit(thr)
-    return df.where(pred)
+    return df.where(bound_predicate(thr, tail=tail, ts_col=ts_col))

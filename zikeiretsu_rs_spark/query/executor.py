@@ -7,8 +7,8 @@ metrics_list.rs:6-19 (.metrics), describe_metrics.rs:9-158
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..catalog.context import DBContext
 from ..catalog.manifest import Manifest
@@ -25,6 +25,20 @@ from .analyzer import (
 from .output import write_output
 from .parser import parse_query
 from .translator import translate_search
+
+
+_METRICS_SCHEMA = pa.schema([("metrics", pa.string())])
+_DESCRIBE_SCHEMA = pa.schema(
+    [("metrics", pa.string())]
+    + [(n, pa.int64()) for n in ("updated_at", "block_num", "from", "end")]
+)
+_BLOCK_LIST_SCHEMA = pa.schema(
+    [("metrics", pa.string())]
+    + [
+        (n, pa.int64())
+        for n in ("updated_at", "block_num", "seq", "block_list_start", "block_list_end")
+    ]
+)
 
 
 class QueryExecutor:
@@ -56,13 +70,17 @@ class QueryExecutor:
         return self._search(iq)
 
     # -- builtin metadata queries -------------------------------------
+    def _frame(self, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+        """Metadata answers are built from Arrow: a DataFrame made from
+        Python tuples needs a Python-worker job to decode them, one made
+        from an Arrow table does not."""
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+        return self.spark.createDataFrame(table)
+
     def _list_metrics(self, iq: ListMetricsQuery) -> DataFrame:
         """.metrics: one String column (metrics_list.rs:6-19)."""
-        db_dir = self.ctx.db_dir(iq.database)
-        names = Manifest.list_metrics(db_dir)
-        return self.spark.createDataFrame(
-            [(n,) for n in names], T.StructType([T.StructField("metrics", T.StringType())])
-        )
+        names = Manifest.list_metrics(self.ctx.db_dir(iq.database))
+        return self._frame([(n,) for n in names], _METRICS_SCHEMA)
 
     def _describe(self, iq: DescribeMetricsQuery) -> DataFrame:
         """.describe / .block_list from the manifest
@@ -76,8 +94,8 @@ class QueryExecutor:
             if iq.metrics_filter not in names:
                 raise StorageError(f"metrics not found: {iq.metrics_filter}")
             names = [iq.metrics_filter]
+        rows = []
         if iq.block_list:
-            rows = []
             for name in names:
                 m = Manifest(db_dir, name)
                 entries = m.load(use_cache=iq.setting.use_cache)
@@ -93,18 +111,7 @@ class QueryExecutor:
                             e.until_nanos // NANOS_PER_SEC,
                         )
                     )
-            schema = T.StructType(
-                [
-                    T.StructField("metrics", T.StringType()),
-                    T.StructField("updated_at", T.LongType()),
-                    T.StructField("block_num", T.LongType()),
-                    T.StructField("seq", T.LongType()),
-                    T.StructField("block_list_start", T.LongType()),
-                    T.StructField("block_list_end", T.LongType()),
-                ]
-            )
-            return self.spark.createDataFrame(rows, schema)
-        rows = []
+            return self._frame(rows, _BLOCK_LIST_SCHEMA)
         for name in names:
             m = Manifest(db_dir, name)
             entries = m.load(use_cache=iq.setting.use_cache)
@@ -118,16 +125,7 @@ class QueryExecutor:
                     (rng[1] // NANOS_PER_SEC) if rng else 0,
                 )
             )
-        schema = T.StructType(
-            [
-                T.StructField("metrics", T.StringType()),
-                T.StructField("updated_at", T.LongType()),
-                T.StructField("block_num", T.LongType()),
-                T.StructField("from", T.LongType()),
-                T.StructField("end", T.LongType()),
-            ]
-        )
-        return self.spark.createDataFrame(rows, schema)
+        return self._frame(rows, _DESCRIBE_SCHEMA)
 
     # -- data queries --------------------------------------------------
     def _search(self, iq: SearchMetricsQuery) -> DataFrame:
@@ -135,4 +133,4 @@ class QueryExecutor:
         field_types = SchemaRegistry(db_dir).load(iq.metrics)
         if field_types is None:
             raise StorageError(f"metrics not found: {iq.metrics}")
-        return translate_search(self.spark, db_dir, iq, len(field_types))
+        return translate_search(self.spark, db_dir, iq, field_types)

@@ -3,12 +3,31 @@
 Reference pipeline equivalent (SURVEY §3.5): `Engine::search` /
 `search_dataframe` (storage/api/read.rs:172-280) becomes
 
-    read.parquet(block_dir)
-      -> dt partition filter        (block-list pruning, S1)
-      -> ts range filter            (block trim + in-memory slice, F5/F6)
-      -> distinct-ts limit          (L1-L4)
-      -> select/rename              (P1-P3)
-      -> optional RFC3339 rendering (D6)
+    read.schema(registry).parquet(block_dir)
+      -> ts range + dt partition filter (block-list pruning, S1; F5/F6)
+      -> distinct-ts limit              (L1-L4)
+      -> ts-ascending output order
+      -> select/rename + RFC3339        (P1-P3, D6)
+
+The served path costs one Spark job for its answer and at most one
+more for a limit threshold:
+
+- the scan schema comes from the schema registry, so no footer-reading
+  inference job runs at plan time;
+- predicates and the projection are SQL text (one `where` / one
+  `selectExpr`): PySpark builds each `functions.*` Column with extra
+  py4j round trips, and the RFC3339 expression alone is dozens of
+  them;
+- when the manifest says the blocks the answer is read from hold at
+  most `spark.sql.files.openCostInBytes` of rows (the finest split
+  Spark's own split-size formula makes, and the measured crossover in
+  SCALE.md) the answer is ordered by `coalesce(1)
+  .sortWithinPartitions(ts)` and the limit threshold runs over
+  `coalesce(1)`: no range-partition sample job, no shuffle, and no
+  Exchange for AQE to split the cached range off into a stage of its
+  own. Larger answers keep the distributed `orderBy(ts)` and
+  threshold, so no single task ever funnels a large scan. Both shapes
+  return identical rows; the manifest only picks the shape.
 
 Everything stays in native Spark expressions (whole-stage codegen); the
 nanosecond RFC3339 formatter is built from string functions, not a UDF.
@@ -16,13 +35,22 @@ nanosecond RFC3339 formatter is built from string functions, not a UDF.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog.manifest import Manifest
-from ..datamodel import PARTITION_COLUMN, TS_COLUMN, field_column_names
-from ..datetime_util import NANOS_PER_DAY, NANOS_PER_SEC
-from ..operators.limits import limit_distinct_ts
+from ..catalog.manifest import BlockEntry, Manifest
+from ..datamodel import (
+    PARTITION_COLUMN,
+    TS_COLUMN,
+    FieldType,
+    field_column_names,
+    metrics_schema,
+)
+from ..datetime_util import NANOS_PER_DAY, NANOS_PER_SEC, rfc3339_offset_suffix
+from ..errors import InvalidColumnDefinition
+from ..operators.limits import bound_predicate, distinct_ts_threshold
 from .analyzer import LimitKind, SearchCondition, SearchMetricsQuery
 
 
@@ -33,130 +61,125 @@ def _dt_string(nanos: int) -> str:
     return date.fromordinal(date(1970, 1, 1).toordinal() + days).isoformat()
 
 
-def apply_range_filter(df: DataFrame, cond: SearchCondition) -> DataFrame:
-    """[since, until) on the nano spine + the derived `dt` partition
-    key so Catalyst prunes partition directories before listing files."""
+def _range_predicate(cond: SearchCondition) -> str | None:
+    """[since, until) on the nano spine plus the derived `dt` partition
+    key, so Catalyst prunes partition directories before listing files
+    and pushes the ts bounds to the Parquet reader."""
+    terms = []
     if cond.since_nanos is not None:
-        df = df.filter(F.col(TS_COLUMN) >= F.lit(cond.since_nanos))
-        if PARTITION_COLUMN in df.columns:
-            df = df.filter(
-                F.col(PARTITION_COLUMN) >= F.lit(_dt_string(cond.since_nanos))
-            )
+        terms.append(f"{TS_COLUMN} >= {cond.since_nanos}L")
+        terms.append(f"{PARTITION_COLUMN} >= '{_dt_string(cond.since_nanos)}'")
     if cond.until_nanos is not None:
-        df = df.filter(F.col(TS_COLUMN) < F.lit(cond.until_nanos))
-        if PARTITION_COLUMN in df.columns:
-            # until is exclusive but sits inside its day partition
-            df = df.filter(
-                F.col(PARTITION_COLUMN) <= F.lit(_dt_string(cond.until_nanos))
-            )
-    return df
+        terms.append(f"{TS_COLUMN} < {cond.until_nanos}L")
+        # until is exclusive but sits inside its day partition
+        terms.append(f"{PARTITION_COLUMN} <= '{_dt_string(cond.until_nanos)}'")
+    return " AND ".join(terms) or None
+
+
+def _block_bound_predicate(bound: int, tail: bool) -> str:
+    """`ts >= bound` (tail) / `ts <= bound` (head) with the matching
+    `dt` partition bound."""
+    op = ">=" if tail else "<="
+    return (
+        f"{bound_predicate(bound, tail=tail)} "
+        f"AND {PARTITION_COLUMN} {op} '{_dt_string(bound)}'"
+    )
+
+
+# Nano-precision RFC3339 rendering (reference
+# TimestampNano::as_formated_datetime, timestamp_nano.rs:58-71; offset
+# applied additively like dataseries_ref.rs:86-106). date_format drops
+# sub-microsecond digits, so the 9-digit fraction is rebuilt from the
+# long column. Seconds come from exact integer math — frac =
+# pmod(local, 1e9), secs = (local - frac) div 1e9 — which floors toward
+# -inf for pre-epoch values; a double division would round a fraction
+# of .99999976 s or more up into the next second. The SQL text and the
+# Column spelling below must stay the same formula
+# (tests/test_rfc3339.py checks both against datetime_util).
+_SECOND_PATTERN = "yyyy-MM-dd'T'HH:mm:ss"
+
+
+def rfc3339_sql(ts: str, offset_seconds: int) -> str:
+    """SQL-text RFC3339 rendering of the long nanos expression `ts`."""
+    local = f"({ts} + {offset_seconds * NANOS_PER_SEC}L)" if offset_seconds else ts
+    frac = f"pmod({local}, {NANOS_PER_SEC}L)"
+    secs = f"({local} - {frac}) div {NANOS_PER_SEC}L"
+    return (
+        f'concat(date_format(timestamp_seconds({secs}), "{_SECOND_PATTERN}"), '
+        f"'.', lpad(cast({frac} AS STRING), 9, '0'), "
+        f"'{rfc3339_offset_suffix(offset_seconds)}')"
+    )
 
 
 def rfc3339_col(ts: Column, offset_seconds: int) -> Column:
-    """Nano-precision RFC3339 rendering as a native expression chain
-    (reference TimestampNano::as_formated_datetime,
-    timestamp_nano.rs:58-71; offset applied additively like
-    dataseries_ref.rs:86-106). date_format drops sub-microsecond
-    digits, so the 9-digit fraction is rebuilt from the long column."""
+    """Column-API RFC3339 rendering of the long nanos column `ts`
+    (same formula as `rfc3339_sql`)."""
     local = ts + F.lit(offset_seconds * NANOS_PER_SEC)
-    secs = (local / NANOS_PER_SEC).cast("long")
-    # floor toward -inf for pre-epoch safety
-    secs = F.when(local < 0, ((local - (NANOS_PER_SEC - 1)) / NANOS_PER_SEC).cast("long")).otherwise(secs)
-    nanos_frac = local - secs * F.lit(NANOS_PER_SEC)
-    if offset_seconds == 0:
-        suffix = "+00:00"
-    else:
-        sign = "+" if offset_seconds >= 0 else "-"
-        a = abs(offset_seconds)
-        suffix = f"{sign}{a // 3600:02d}:{(a % 3600) // 60:02d}"
+    frac = F.pmod(local, F.lit(NANOS_PER_SEC))
+    secs = F.call_function("div", local - frac, F.lit(NANOS_PER_SEC))
     return F.concat(
-        F.date_format(F.timestamp_seconds(secs), "yyyy-MM-dd'T'HH:mm:ss"),
+        F.date_format(F.timestamp_seconds(secs), _SECOND_PATTERN),
         F.lit("."),
-        F.lpad(nanos_frac.cast("string"), 9, "0"),
-        F.lit(suffix),
+        F.lpad(frac.cast("string"), 9, "0"),
+        F.lit(rfc3339_offset_suffix(offset_seconds)),
     )
 
 
-def _manifest_limit_bound(
-    db_dir: str,
-    metrics: str,
-    cond: SearchCondition,
-    n: int,
-    tail: bool,
-    use_cache: bool = False,
-) -> int | None:
-    """L4: use the manifest's per-block distinct_ts to compute a ts
-    bound that restricts the scan BEFORE the distinct-ts threshold job
-    (reference accumulates `timestamp_num` to skip whole blocks,
-    storage/api/read.rs:115-170). Returns None when the manifest is
-    absent or pruning would not drop anything. `use_cache` serves a
-    repeated query's manifest from the process-local memo (the
-    dialect's `use_cache` setting — block_cache.rs parity)."""
-    entries = Manifest(db_dir, metrics).load(use_cache=use_cache)
-    if not entries:
-        return None
-    # block-range search mirrors BlockList::search (block_list/mod.rs:254)
-    cand = Manifest.search(entries, cond.since_nanos, cond.until_nanos)
-    if not cand:
-        return None
-    sel = Manifest.prune_for_limit(cand, n, tail=tail)
-    if len(sel) >= len(cand):
-        return None
-    return (
-        min(e.since_nanos for e in sel)
-        if tail
-        else max(e.until_nanos for e in sel)
-    )
+def _one_task(
+    spark: SparkSession, blocks: list[BlockEntry], field_types: list[FieldType]
+) -> bool:
+    """True when the manifest blocks an answer is read from hold no
+    more than `spark.sql.files.openCostInBytes` of rows (rows x
+    in-memory row width; 4 MiB by default). Spark's own split size,
+    min(maxPartitionBytes, max(openCostInBytes, bytes / cores)), never
+    cuts a scan finer than that, and that is where one task stopped
+    beating the distributed sort when measured (SCALE.md, "The served
+    path"). No blocks (a store without manifest entries) means the
+    size is unknown: the distributed shape."""
+    if not blocks:
+        return False
+    width = 8 + sum(ft.byte_width() for ft in field_types)  # ts + fields
+    task_bytes = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    return sum(e.rows for e in blocks) * width <= task_bytes
 
 
 def _apply_limit(
-    df: DataFrame, q: SearchMetricsQuery, db_dir: str, n: int, tail: bool
+    df: DataFrame,
+    cand: list[BlockEntry],
+    kept: list[BlockEntry],
+    n: int,
+    tail: bool,
+    one_task: Callable[[list[BlockEntry]], bool],
 ) -> DataFrame:
-    """Distinct-ts limit with manifest block pruning. When the manifest
-    yields a bound, the threshold is computed over the pruned file set
-    only and — after verifying the pruned range really holds n distinct
+    """Distinct-ts limit (`operators/limits.py`) with manifest block
+    pruning (L4). `cand` are the blocks in range and `kept` the
+    prefix (head) / suffix (tail) of them whose per-block distinct_ts
+    reach n (`Manifest.prune_for_limit`; the reference accumulates
+    `timestamp_num` to skip whole blocks, storage/api/read.rs:115-170).
+    When `kept` drops blocks, the threshold is computed over those
+    blocks only and — after verifying they really hold n distinct
     timestamps (cross-block duplicate ts can make the manifest
     overcount; the sufficiency check keeps results exact where the
     reference's own pruning could truncate) — applied as a LITERAL
     predicate, so both jobs touch only the pruned blocks and the final
-    scan skips row groups on a constant comparison."""
+    scan skips row groups on a constant comparison. `one_task(blocks)`
+    picks a `coalesce(1)` threshold for a scan of `blocks`."""
     if n <= 0:
         return df.limit(0)
-    bound = _manifest_limit_bound(
-        db_dir, q.metrics, q.condition, n, tail,
-        use_cache=q.setting.use_cache,
-    )
-    if bound is not None:
-        pruned = df.filter(
-            F.col(TS_COLUMN) >= F.lit(bound) if tail else F.col(TS_COLUMN) <= F.lit(bound)
-        )
-        if PARTITION_COLUMN in df.columns:
-            day = _dt_string(bound)
-            pruned = pruned.filter(
-                F.col(PARTITION_COLUMN) >= F.lit(day)
-                if tail
-                else F.col(PARTITION_COLUMN) <= F.lit(day)
-            )
-        order = F.col(TS_COLUMN).desc() if tail else F.col(TS_COLUMN).asc()
-        agg = F.min(TS_COLUMN) if tail else F.max(TS_COLUMN)
-        row = (
-            pruned.select(TS_COLUMN)
-            .distinct()
-            .orderBy(order)
-            .limit(n)
-            .agg(agg.alias("thr"), F.count("*").alias("cnt"))
-            .first()
-        )
-        if row["cnt"] == n:
-            pred = (
-                F.col(TS_COLUMN) >= F.lit(int(row["thr"]))
-                if tail
-                else F.col(TS_COLUMN) <= F.lit(int(row["thr"]))
-            )
-            return pruned.filter(pred)
+    if len(kept) < len(cand):
+        bound = min(e.since_nanos for e in kept) if tail else max(e.until_nanos for e in kept)
+        pruned = df.where(_block_bound_predicate(bound, tail))
+        scan = pruned.coalesce(1) if one_task(kept) else pruned
+        thr, cnt = distinct_ts_threshold(scan, n, tail=tail)
+        if cnt == n:
+            return pruned.where(bound_predicate(thr, tail=tail))
         # manifest overcounted (shared ts across blocks): fall through
-        # to the unpruned scalar-threshold path — correctness first
-    return limit_distinct_ts(df, n, tail=tail)
+        # to the unpruned threshold — correctness first
+    scan = df.coalesce(1) if one_task(cand) else df
+    thr, _ = distinct_ts_threshold(scan, n, tail=tail)
+    if thr is None:
+        return df.limit(0)
+    return df.where(bound_predicate(thr, tail=tail))
 
 
 # Decoded-data cache (the reference's block LRU analog,
@@ -231,35 +254,17 @@ def _scan_cache_lookup(
         return df
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def translate_search(
-    spark: SparkSession, db_dir: str, q: SearchMetricsQuery, n_fields: int
+    spark: SparkSession,
+    db_dir: str,
+    q: SearchMetricsQuery,
+    field_types: list[FieldType],
 ) -> DataFrame:
-    block_dir = f"{db_dir}/block/{q.metrics}"
-
-    def build() -> DataFrame:
-        df = spark.read.parquet(block_dir)
-        df = apply_range_filter(df, q.condition)
-        if q.condition.limit is not None:
-            df = _apply_limit(
-                df, q, db_dir, q.condition.limit.n,
-                q.condition.limit.kind is LimitKind.TAIL,
-            )
-        return df
-
-    if q.setting.use_cache:
-        lim = q.condition.limit
-        key = (
-            block_dir,
-            Manifest(db_dir, q.metrics).updated_at_nanos(),
-            q.condition.since_nanos,
-            q.condition.until_nanos,
-            None if lim is None else (lim.kind, lim.n),
-        )
-        df = _scan_cache_lookup(spark, key, build)
-    else:
-        df = build()
-
-    physical = field_column_names(n_fields)
+    physical = field_column_names(len(field_types))
     if q.field_selectors is None:
         selected = physical
         out_names = list(q.field_names) if q.field_names else [TS_COLUMN] + physical
@@ -267,15 +272,61 @@ def translate_search(
         selected = [physical[i] for i in q.field_selectors]
         assert q.field_names is not None
         out_names = list(q.field_names)
-
-    df = df.select(TS_COLUMN, *selected).toDF(*out_names)
-    # results are always ts-ascending (SURVEY §2.4: no ORDER BY exists;
-    # data is served sorted). sortWithinPartitions keeps files' order;
-    # a global sort is applied only here at the output boundary.
-    df = df.orderBy(TS_COLUMN)
-
-    if q.format_datetime:
-        df = df.withColumn(
-            TS_COLUMN, rfc3339_col(F.col(TS_COLUMN), q.timezone.offset_seconds)
+    if len(out_names) != len(selected) + 1:
+        raise InvalidColumnDefinition(
+            f"{len(out_names) - 1} column names for {len(selected)} fields: "
+            + ",".join(out_names[1:])
         )
-    return df
+    block_dir = f"{db_dir}/block/{q.metrics}"
+    cond = q.condition
+    # block-range search mirrors BlockList::search (block_list/mod.rs:254)
+    cand = Manifest.search(
+        Manifest(db_dir, q.metrics).load(use_cache=q.setting.use_cache),
+        cond.since_nanos,
+        cond.until_nanos,
+    )
+    lim = cond.limit
+    tail = lim is not None and lim.kind is LimitKind.TAIL
+    # the blocks the answer is read from: for a limit, those its
+    # distinct_ts reach (all of `cand` when pruning drops none)
+    kept = cand if lim is None else Manifest.prune_for_limit(cand, lim.n, tail=tail)
+
+    def one_task(blocks: list[BlockEntry]) -> bool:
+        return _one_task(spark, blocks, field_types)
+
+    def build() -> DataFrame:
+        schema = metrics_schema(field_types).add(PARTITION_COLUMN, "string")
+        df = spark.read.schema(schema).parquet(block_dir)
+        pred = _range_predicate(cond)
+        if pred is not None:
+            df = df.where(pred)
+        if lim is not None:
+            df = _apply_limit(df, cand, kept, lim.n, tail, one_task)
+        return df
+
+    if q.setting.use_cache:
+        key = (
+            block_dir,
+            Manifest(db_dir, q.metrics).updated_at_nanos(),
+            cond.since_nanos,
+            cond.until_nanos,
+            None if lim is None else (lim.kind, lim.n),
+        )
+        df = _scan_cache_lookup(spark, key, build)
+    else:
+        df = build()
+
+    # results are always ts-ascending (SURVEY §2.4: no ORDER BY exists;
+    # data is served sorted), ordered on the long spine before rendering.
+    # After the manifest-overcount fallback a limit's answer can reach
+    # past `kept`, by no more distinct ts than the manifest overcounted.
+    if one_task(kept):
+        df = df.coalesce(1).sortWithinPartitions(TS_COLUMN)
+    else:
+        df = df.orderBy(TS_COLUMN)
+
+    ts = rfc3339_sql(TS_COLUMN, q.timezone.offset_seconds) if q.format_datetime else TS_COLUMN
+    return df.selectExpr(
+        f"{ts} AS {_quote(out_names[0])}",
+        *(f"{_quote(p)} AS {_quote(name)}" for p, name in zip(selected, out_names[1:])),
+    )

@@ -62,11 +62,8 @@ class QueryHttpServer:
                 try:
                     length = int(self.headers.get("Content-Length", "0"))
                     body = json.loads(self.rfile.read(length) or b"{}")
-                    df = outer.engine.execute_to_df(
+                    table, _ = outer.engine.execute_to_arrow(
                         body["query"], body.get("now_nanos")
-                    )
-                    table = pa.Table.from_pandas(
-                        df.toPandas(), preserve_index=False
                     )
                     payload = _table_to_ipc_bytes(table)
                 except Exception as e:  # parse/plan/execution errors -> 400
