@@ -13,7 +13,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from zikeiretsu_rs_spark import DBContext, Engine, QueryHttpServer, execute_remote
+from zikeiretsu_rs_spark import DBContext, Engine
 from zikeiretsu_rs_spark.datamodel import DataPoint, FieldType
 from zikeiretsu_rs_spark.session import get_spark
 
@@ -59,7 +59,7 @@ def main() -> None:
     print(engine.execute("select * from .metrics"))
     print(engine.execute("select * from .describe"))
 
-    # -- remote boundary #1: REAL Arrow Flight (gRPC via pyarrow.flight)
+    # -- remote boundary: REAL Arrow Flight (gRPC via pyarrow.flight)
     from zikeiretsu_rs_spark.flight_server import (
         ZikeiretsuFlightServer,
         execute_flight,
@@ -76,16 +76,6 @@ def main() -> None:
         f"output_condition={meta}"
     )
     fserver.shutdown()
-
-    # -- remote boundary #2: Arrow-IPC-over-HTTP (zero-dependency client)
-    server = QueryHttpServer(engine).start()
-    table = execute_remote(
-        server.url,
-        "with cols = [is_buy, price, size], format_datetime = false "
-        "select price from trades where ts in ('2021-09-27', '2021-09-28')",
-    )
-    print(f"== remote query over {server.url}: {table.num_rows} rows via Arrow IPC")
-    server.stop()
 
     # -- LLM-pipeline operators over any DataFrame
     from pyspark.sql import functions as F

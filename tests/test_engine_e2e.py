@@ -321,129 +321,24 @@ class TestDriverDataThroughWarehouse:
         assert "events_m" in {r["metrics"] for r in mdf.collect()}
 
 
-class TestDecodedDataCache:
-    """S5/block-cache parity: `use_cache` (dialect default TRUE) wires
-    the scanned+trimmed metrics range to a memoized .cache() — the
-    Spark analog of the reference's decoded-block LRU
-    (storage/cache/block_cache.rs:13-52). The manifest memo
-    (catalog/manifest.py) is the block-LIST cache; this is the block
-    DATA cache."""
+class TestReadAfterWrite:
+    """A read after `persist` sees the new rows, also while readers race
+    a writer: every query plans a fresh scan, and `use_cache` (dialect
+    default TRUE) memoizes only the parsed manifest, which `persist`
+    writes through (catalog/manifest.py)."""
 
     Q = (
         "with format_datetime = false "
         "select * from trades where ts in ('2021-09-30', '2021-10-02')"
     )
 
-    def _plan(self, df):
-        jexec = df._jdf.queryExecution()
-        return jexec.explainString(
-            df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-
-    def test_repeated_query_serves_from_storage_memory(self, engine):
-        make_trades(engine)
-        df1 = engine.execute_to_df(self.Q, now_nanos=NOW)
-        r1 = df1.collect()
-        df2 = engine.execute_to_df(self.Q, now_nanos=NOW)
-        plan2 = self._plan(df2)
-        # second scan reads the in-memory columnar cache...
-        assert "InMemoryTableScan" in plan2, plan2
-        # ...whose cached child kept full Parquet pushdown
-        assert "PushedFilters" in plan2 and "GreaterThanOrEqual(ts," in plan2
-        assert df2.collect() == r1
-        # and the cached range really is materialized in storage memory
-        from zikeiretsu_rs_spark.query import translator
-
-        entry = next(
-            df for k, df in translator._SCAN_CACHE.items()
-            if k[0].startswith(engine.ctx.data_dir)
-        )
-        assert entry.storageLevel.useMemory
-
-    def test_use_cache_false_bypasses(self, engine):
-        make_trades(engine)
-        q = self.Q.replace(
-            "with format_datetime = false",
-            "with format_datetime = false, use_cache = false",
-        )
-        engine.execute_to_df(q, now_nanos=NOW).collect()
-        plan = self._plan(engine.execute_to_df(q, now_nanos=NOW))
-        assert "InMemoryTableScan" not in plan, plan
-
-    def test_write_invalidates_cached_range(self, engine):
+    def test_read_after_persist_sees_new_row(self, engine):
         store, _ = make_trades(engine)
-        spark = engine.spark
-
-        def cached_rdds():
-            return len(
-                spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            )
-
-        base_rdds = cached_rdds()
         r1 = engine.execute_to_df(self.Q, now_nanos=NOW).collect()
-        from zikeiretsu_rs_spark.query import translator
-
-        my_dir = engine.ctx.data_dir
-        stale_keys = [
-            k for k in translator._SCAN_CACHE if k[0].startswith(my_dir)
-        ]
-        assert stale_keys
-        # a new persist bumps the manifest updated_at: the next read
-        # must see the new row (fresh scan, not the cached range), the
-        # stale memo key must be evicted, and the stale entry must be
-        # unpersisted so storage stays bounded (one cached RDD per
-        # live range, not one per manifest generation)
         store.push(DataPoint.new(nanos(2021, 10, 1, 11), True, 104.0, 9.0))
         store.persist()
         r2 = engine.execute_to_df(self.Q, now_nanos=NOW).collect()
         assert len(r2) == len(r1) + 1
-        live = [
-            k for k in translator._SCAN_CACHE if k[0].startswith(my_dir)
-        ]
-        assert live and all(k not in stale_keys for k in live)
-        assert cached_rdds() <= base_rdds + 1
-
-
-class TestScanCacheBounds:
-    """The decoded-data cache's bounded-LRU + thread-safety contract
-    (post-review r06 hardening): capacity stays at _SCAN_CACHE_MAX
-    with evicted plans unpersisted, and concurrent lookups with
-    interleaved invalidation never raise."""
-
-    def test_capacity_bound_evicts_and_unpersists(self, engine):
-        from zikeiretsu_rs_spark.query import translator
-
-        store = engine.writable_store("m", [FieldType.FLOAT64])
-        base = nanos(2021, 9, 1)
-        store.push_multi(
-            [
-                DataPoint.new(base + i * NANOS_PER_SEC, float(i))
-                for i in range(120)
-            ]
-        )
-        store.persist()
-        spark = engine.spark
-        before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        # > _SCAN_CACHE_MAX distinct ranges, each its own cache key
-        n = translator._SCAN_CACHE_MAX + 8
-        for i in range(n):
-            engine.execute_to_df(
-                "with format_datetime = false select * from m "
-                f"where ts in ('2021-09-01 00:00:{i:02d}', '2021-09-02')",
-                now_nanos=NOW,
-            ).collect()
-        my = [
-            k for k in translator._SCAN_CACHE
-            if k[0].startswith(engine.ctx.data_dir)
-        ]
-        assert len(my) <= translator._SCAN_CACHE_MAX
-        assert len(translator._SCAN_CACHE) <= translator._SCAN_CACHE_MAX
-        # evicted plans were unpersisted: cached-RDD growth is bounded
-        # by the capacity, not by the number of distinct ranges
-        after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        assert after - before <= translator._SCAN_CACHE_MAX
 
     def test_concurrent_queries_with_invalidation(self, engine):
         import threading

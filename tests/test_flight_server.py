@@ -1,10 +1,10 @@
 """S15 real Arrow Flight boundary (gRPC framing via pyarrow.flight —
-no grpcio wheel needed): the wire-parity twin of test_server.py's
-HTTP boundary, matching the reference Flight service
-(arrow_flight_server/mod.rs:28-106, do_get_handler.rs:16-55):
-ticket = dialect query string; stream = schema + one batch with the
-OutputCondition JSON in app_metadata; errors -> INVALID_ARGUMENT-style
-failures; other RPCs unimplemented."""
+no grpcio wheel needed), the engine's one remote boundary, matching
+the reference Flight service (arrow_flight_server/mod.rs:28-106,
+do_get_handler.rs:16-55): a client with no Spark session sends
+ticket = dialect query string and gets stream = schema + one batch
+with the OutputCondition JSON in app_metadata; errors ->
+INVALID_ARGUMENT-style failures; other RPCs unimplemented."""
 
 import json
 
@@ -57,6 +57,17 @@ class TestFlightBoundary:
         assert list(remote.columns) == list(local.columns)
         assert remote.equals(local)
         assert len(remote) == 2
+
+    def test_rfc3339_rendering_crosses_the_wire(self, flight_engine):
+        _, server, base = flight_engine
+        q = (
+            "with cols = [price, size], tz = +09:00 "
+            "select price from trades where ts = '2024-01-01 09:00'"
+        )
+        table, _ = execute_flight(server.location, q, now_nanos=base)
+        ts = table.column("ts").to_pylist()
+        assert len(ts) == 2
+        assert all(t.endswith("+09:00") for t in ts), ts
 
     def test_output_condition_rides_app_metadata(self, flight_engine):
         _, server, base = flight_engine
@@ -168,3 +179,61 @@ class TestFlightBoundary:
                 )
             )
         assert all(t.num_rows == 48 for t, _ in results)
+
+
+class TestRemoteBoundary:
+    """The remote-boundary checks that first ran against the
+    Arrow-over-HTTP twin, now over Flight, each pinning what the
+    Flight-specific tests above do not."""
+
+    def test_query_roundtrip_matches_local(self, flight_engine):
+        """The streamed table equals the local Arrow answer it is
+        served from, schema types included (no pandas hop on either
+        side)."""
+        engine, server, base = flight_engine
+        q = (
+            "with cols = [price, size], format_datetime = false "
+            "select price, size from trades where ts = '2024-01-01 06:00'"
+        )
+        remote, _ = execute_flight(server.location, q, now_nanos=base)
+        local, _ = engine.execute_to_arrow(q, now_nanos=base)
+        assert remote.schema.equals(local.schema), (remote.schema, local.schema)
+        assert remote.equals(local)
+        assert remote.num_rows == 2  # hour-accuracy '=' widens to one hour
+
+    def test_parse_error_propagates(self, flight_engine):
+        """The client learns which error the server's parser raised,
+        not only that the call failed."""
+        engine, server, base = flight_engine
+        bad = "select from nothing where"
+        with pytest.raises(Exception) as local:
+            engine.execute_to_arrow(bad, now_nanos=base)
+        with pytest.raises(RuntimeError, match="remote query failed") as remote:
+            execute_flight(server.location, bad, now_nanos=base)
+        assert type(local.value).__name__ in str(remote.value)
+
+    def test_concurrent_clients(self, flight_engine):
+        """Four clients asking four different ranges at once each get
+        their own answer: streams are not crossed."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        engine, server, base = flight_engine
+        queries = [
+            "with cols = [price, size], format_datetime = false "
+            f"select price from trades where ts = '2024-01-01 0{h}:00'"
+            for h in (6, 7, 8, 9)
+        ]
+        with ThreadPoolExecutor(4) as ex:
+            results = list(
+                ex.map(
+                    lambda q: execute_flight(
+                        server.location, q, now_nanos=base
+                    ),
+                    queries,
+                )
+            )
+        for q, (remote, _) in zip(queries, results):
+            local, _ = engine.execute_to_arrow(q, now_nanos=base)
+            assert remote.equals(local), q
+        prices = [t.column("price").to_pylist() for t, _ in results]
+        assert prices == [[100.0 + 2 * h, 101.0 + 2 * h] for h in (6, 7, 8, 9)]

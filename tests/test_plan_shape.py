@@ -1183,6 +1183,12 @@ class TestRound15OptPlanShapes:
         )
         # brute reference: explicit distinct shingle sets in python
         import itertools
+        from decimal import ROUND_HALF_UP, Decimal
+
+        def half_up(x):
+            # Spark's F.round: HALF_UP on the double's shortest decimal
+            # form (Python's round() is banker's rounding)
+            return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
         def shset(t):
             w = t.lower().split()
@@ -1193,7 +1199,7 @@ class TestRound15OptPlanShapes:
             a, b = shset(ta), shset(tb)
             j = len(a & b) / len(a | b)
             if j >= 0.1:
-                want.append((ia, ib, round(j, 6)))
+                want.append((ia, ib, half_up(j)))
         got_rows = sorted(
             (r.id_a, r.id_b, r.jaccard) for r in got.collect()
         )

@@ -13,10 +13,12 @@ what the served answer looks like.
   order (the benchmark's checksum ignores order, so only this file
   guards it).
 - Metadata answers keep their schemas, also when empty.
-- Both servers return Arrow without a pandas hop: a nullable UINT64
-  field with a null stays int64, and nanos above 2^53 come back exact.
+- The Flight server and the json/table renders use Arrow without a
+  pandas hop: a nullable UINT64 field with a null stays int64, and
+  nanos above 2^53 come back exact.
 """
 
+import json
 import uuid
 from contextlib import contextmanager
 
@@ -211,8 +213,9 @@ class TestMetadataSchemas:
 
 
 class TestArrowAtTheBoundary:
-    """Through both servers: the answer is Spark's Arrow, not a pandas
-    round trip (which turns a nullable long column into float64)."""
+    """Over Flight and in the text renders: the answer is Spark's Arrow,
+    not a pandas round trip (which turns a nullable long column into
+    float64)."""
 
     @pytest.fixture
     def typed(self, spark, tmp_ctx):
@@ -245,13 +248,16 @@ class TestArrowAtTheBoundary:
             server.shutdown()
         self._check(table, t0)
 
-    def test_http(self, typed):
-        from zikeiretsu_rs_spark.server import QueryHttpServer, execute_remote
-
+    def test_json_and_table_output(self, typed):
         eng, t0 = typed
-        server = QueryHttpServer(eng).start()
-        try:
-            table = execute_remote(server.url, self.QUERY, now_nanos=NOW)
-        finally:
-            server.stop()
-        self._check(table, t0)
+
+        def reject(constant):
+            raise AssertionError(f"{constant} is not JSON")
+
+        out = eng.execute(self.QUERY.replace("with ", "with format = json, "), now_nanos=NOW)
+        assert json.loads(out, parse_constant=reject) == {
+            "ts": [t0, t0 + 1, t0 + 2],
+            "f0": [7, None, 2**62],
+        }
+        table = eng.execute(self.QUERY, now_nanos=NOW)
+        assert str(2**62) in table and "e+" not in table, table

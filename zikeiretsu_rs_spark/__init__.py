@@ -25,9 +25,7 @@ __all__ = [
     "DEFAULT_TIMEZONE",
     "DatetimeAccuracy",
     "Engine",
-    "QueryHttpServer",
     "TimeZoneAndOffset",
-    "execute_remote",
     "format_rfc3339_nanos",
     "parse_query",
     "resolve_timezone",
@@ -40,8 +38,6 @@ _LAZY = {
     # `import zikeiretsu_rs_spark` stays cheap for parser/datetime use
     "Engine": ("zikeiretsu_rs_spark.engine", "Engine"),
     "DBContext": ("zikeiretsu_rs_spark.catalog.context", "DBContext"),
-    "QueryHttpServer": ("zikeiretsu_rs_spark.server", "QueryHttpServer"),
-    "execute_remote": ("zikeiretsu_rs_spark.server", "execute_remote"),
 }
 
 

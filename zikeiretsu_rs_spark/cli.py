@@ -5,16 +5,14 @@ multiline-until-';' loop, repl/mod.rs:28-67) and the config file merge
 (config/mod.rs:35-109). The Arrow Flight server/client mode (§3.2) is
 served by `--serve-flight`: REAL gRPC Flight framing via
 pyarrow.flight (flight_server.py, wire-compatible with any Flight
-client; parity spelled out in tests/test_flight_server.py), and by
-`--serve`: an Arrow-IPC-over-HTTP boundary (server.py) — the same
-payload for zero-dependency clients. On a production Spark deployment
-the idiomatic equivalent is Spark Connect (`spark.remote("sc://host")`).
+client; parity spelled out in tests/test_flight_server.py). On a
+production Spark deployment the idiomatic equivalent is Spark Connect
+(`spark.remote("sc://host")`).
 
 Usage:
     python -m zikeiretsu_rs_spark --data-dir /tmp/zdb "select * from .metrics"
     python -m zikeiretsu_rs_spark --data-dir /tmp/zdb        # REPL
     python -m zikeiretsu_rs_spark --config ctx.toml "..."
-    python -m zikeiretsu_rs_spark --data-dir /tmp/zdb --serve --port 8815
     python -m zikeiretsu_rs_spark --data-dir /tmp/zdb --serve-flight --port 51033
 """
 
@@ -162,16 +160,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--database", default="default", help="default database name")
     p.add_argument("--config", default=None, help="TOML/JSON context config file")
     p.add_argument(
-        "--serve", action="store_true",
-        help="run the Arrow-over-HTTP query server (S15 boundary)",
-    )
-    p.add_argument(
         "--serve-flight", action="store_true",
         help="run the Arrow Flight gRPC server (S15 boundary; "
         "reference default port 51033)",
     )
-    p.add_argument("--host", default="127.0.0.1", help="--serve bind host")
-    p.add_argument("--port", type=int, default=8815, help="--serve bind port")
+    p.add_argument("--host", default="127.0.0.1", help="--serve-flight bind host")
+    p.add_argument("--port", type=int, default=8815, help="--serve-flight bind port")
     p.add_argument("query", nargs="?", default=None, help="adhoc query (REPL if omitted)")
     args = p.parse_args(argv)
     engine = build_engine(args)
@@ -189,18 +183,6 @@ def main(argv: list[str] | None = None) -> int:
             server.serve()
         except KeyboardInterrupt:
             server.shutdown()
-        return 0
-    if args.serve:
-        from .server import QueryHttpServer
-
-        server = QueryHttpServer(engine, host=args.host, port=args.port).start()
-        print(f"serving Arrow-over-HTTP on {server.url} (Ctrl-C to stop)")
-        try:
-            import threading
-
-            threading.Event().wait()
-        except KeyboardInterrupt:
-            server.stop()
         return 0
     if args.query is not None:
         return run_query(engine, args.query)

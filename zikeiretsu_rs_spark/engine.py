@@ -75,7 +75,7 @@ class Engine:
         """Run a dialect query and collect its answer as an Arrow table,
         with the interpreted query (for its output condition). Collected
         straight from Spark's Arrow batches: a pandas hop would turn a
-        nullable long column into float64. The Flight and HTTP servers
-        answer from this."""
+        nullable long column into float64. The Flight server answers
+        from this."""
         df, iq = self._executor.execute_to_df(query, now_nanos)
         return df.toArrow(), iq

@@ -19,15 +19,13 @@ do_get_handler.rs:16-55). Exactly like the reference:
   (`Status::not_found("no data found")`, do_get_handler.rs:49).
 
 The transport is pyarrow.flight, which bundles the gRPC C++ stack —
-no grpcio wheel required (earlier rounds shipped the same Arrow-IPC
-payload over HTTP in `server.py` while grpcio looked like the only
-route; that boundary stays for zero-dependency clients, this one is
-the wire-compatible Flight endpoint any Flight client can dial).
+no grpcio wheel required. This is the engine's one remote boundary:
+the wire-compatible Flight endpoint any Flight client can dial.
 
 Extension beyond the reference ticket format: a ticket that parses as
 a JSON object `{"query": ..., "now_nanos": ...}` pins the query's
-plan-time clock — the determinism hook the HTTP boundary already
-exposes; a raw UTF-8 ticket behaves exactly like the reference.
+plan-time clock (the determinism hook tests use); a raw UTF-8 ticket
+behaves exactly like the reference.
 """
 
 from __future__ import annotations
@@ -124,8 +122,7 @@ def execute_flight(
 ) -> tuple[pa.Table, dict]:
     """Client side: dial any Flight endpoint, submit the dialect query
     as the ticket, read back (table, output_condition). Raises
-    RuntimeError on server-reported errors — same surface as
-    `server.execute_remote`."""
+    RuntimeError on server-reported errors."""
     if not FLIGHT_AVAILABLE:  # pragma: no cover
         raise RuntimeError("pyarrow.flight is unavailable in this build")
     ticket_payload: bytes

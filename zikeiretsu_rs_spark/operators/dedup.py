@@ -84,11 +84,13 @@ def word_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     distinct: bool = True,
 ) -> DataFrame:
-    """Distinct word-n-gram shingles per document: (id, shingle).
-    Tokenization = lowercase + whitespace split (matches the DuckDB
-    oracle formulation in the test suite). `distinct=False` skips the
-    corpus-wide dedup exchange for consumers whose aggregate is
-    duplicate-insensitive (minhash minima)."""
+    """Word-n-gram shingles per document: (id, shingle), distinct by
+    default. Tokenization = lowercase + whitespace split (matches the
+    DuckDB oracle formulation in the test suite). `distinct=False` skips
+    the corpus-wide dedup exchange for consumers whose downstream
+    aggregate removes duplicates itself: a per-document `collect_set`
+    (the Jaccard pair table and re-scorers) or a min (minhash
+    minima)."""
     ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     shingles = F.expr(
         f"transform(sequence(0, size(_ws) - {n}), i -> "

@@ -9,7 +9,10 @@ Shape parity:
 - json: COLUMN-oriented dict {col: [values...]} (JsonDfOutput,
   json_format.rs:6-24) — not row-oriented lines, so `df.write.json` is
   wrong here; results at this point are query outputs (small by
-  construction of the dialect), so a toPandas collect is appropriate.
+  construction of the dialect), so a driver collect is appropriate.
+- Both text formats render from `df.toArrow()`, the collect the Flight
+  server answers from: a pandas hop turns a nullable long column into
+  float64 (7 -> 7.0, null -> NaN, 2**62 inexact), and NaN is not JSON.
 - parquet / parquet_snappy: file write (parquet_format.rs:8-29).
 """
 
@@ -26,13 +29,13 @@ from .ast import OutputFormat
 
 
 def render_table(df: DataFrame) -> str:
-    pdf = df.toPandas()
+    # a long column with nulls renders as Python ints and None
+    pdf = df.toArrow().to_pandas(integer_object_nulls=True)
     return pdf.to_string(index=False)
 
 
 def render_json(df: DataFrame) -> str:
-    pdf = df.toPandas()
-    return json.dumps({c: pdf[c].tolist() for c in pdf.columns}, default=str)
+    return json.dumps(df.toArrow().to_pydict(), default=str)
 
 
 def write_output(df: DataFrame, cond: OutputCondition) -> str | DataFrame | None:

@@ -23,11 +23,15 @@ more for a limit threshold:
   Spark's own split-size formula makes, and the measured crossover in
   SCALE.md) the answer is ordered by `coalesce(1)
   .sortWithinPartitions(ts)` and the limit threshold runs over
-  `coalesce(1)`: no range-partition sample job, no shuffle, and no
-  Exchange for AQE to split the cached range off into a stage of its
-  own. Larger answers keep the distributed `orderBy(ts)` and
-  threshold, so no single task ever funnels a large scan. Both shapes
-  return identical rows; the manifest only picks the shape.
+  `coalesce(1)`: no range-partition sample job and no shuffle.
+  Larger answers keep the distributed `orderBy(ts)` and threshold, so
+  no single task ever funnels a large scan. Both shapes return
+  identical rows; the manifest only picks the shape.
+
+Every query plans one uncached DataFrame. The reference's decoded-block
+LRU is not rebuilt: the OS page cache under snappy Parquet serves a
+repeated range (SURVEY.md:419). `use_cache` drives only the
+parsed-manifest memo in `catalog/manifest.py`.
 
 Everything stays in native Spark expressions (whole-stage codegen); the
 nanosecond RFC3339 formatter is built from string functions, not a UDF.
@@ -182,78 +186,6 @@ def _apply_limit(
     return df.where(bound_predicate(thr, tail=tail))
 
 
-# Decoded-data cache (the reference's block LRU analog,
-# storage/cache/block_cache.rs:13-52, wired to the dialect's
-# `use_cache` setting exactly like the manifest memo in
-# catalog/manifest.py): the scanned+trimmed metrics DataFrame for a
-# query's block range is .cache()d and memoized per
-# (block_dir, manifest updated_at, range, limit). A repeated query
-# over the same range serves its second execution from storage memory
-# (InMemoryTableScan) instead of re-reading and re-decoding Parquet —
-# the reference caches decoded blocks per block_timestamp with the
-# same effect. Granularity is the RDD partition (≈ one file split,
-# the reference's block), lazily materialized: only partitions an
-# action touches get cached. Eviction: Spark's storage manager evicts
-# LRU under memory pressure (MEMORY_AND_DISK — the bounded-cache
-# property the reference gets from its LRU capacity), and entries for
-# a stale manifest updated_at are unpersisted on the next read
-# (write-through invalidation, mirroring Manifest.save). The cache
-# boundary sits ABOVE the range filter + limit, so the cached child
-# plan keeps full Parquet pushdown for its first execution and
-# different projections of the same range share one entry.
-# LRU, capacity-bounded like the reference block cache (block_cache.rs
-# caps entries; unbounded growth would otherwise accumulate one
-# MEMORY_AND_DISK plan per distinct query range — disk blocks are only
-# freed by explicit unpersist, not by the storage manager's memory
-# eviction). dict preserves insertion order; hits re-insert (LRU).
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
-_SCAN_CACHE_MAX = 32
-_SCAN_CACHE_LOCK = __import__("threading").Lock()
-
-
-def _evict_locked(k: tuple) -> None:
-    df = _SCAN_CACHE.pop(k, None)
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _scan_cache_lookup(
-    spark: SparkSession, key: tuple, build
-) -> DataFrame:
-    # Double-checked: the lock covers ONLY dict bookkeeping; build()
-    # can run Spark jobs (the limit path executes a threshold .first())
-    # and must NOT serialize unrelated concurrent queries behind a
-    # cache miss. Two threads racing the same missing key both build;
-    # the second check makes one the winner — the loser's plan was
-    # never .cache()d, so nothing leaks.
-    with _SCAN_CACHE_LOCK:
-        cached = _SCAN_CACHE.get(key)
-        if cached is not None and cached.sparkSession is spark:
-            _SCAN_CACHE[key] = _SCAN_CACHE.pop(key)  # refresh LRU slot
-            return cached
-    df = build()
-    with _SCAN_CACHE_LOCK:
-        cached = _SCAN_CACHE.get(key)
-        if cached is not None and cached.sparkSession is spark:
-            _SCAN_CACHE[key] = _SCAN_CACHE.pop(key)
-            return cached
-        # invalidate entries for the same block_dir with a different
-        # manifest updated_at (superseded by a write) or a dead session
-        for k in list(_SCAN_CACHE):
-            if k[0] == key[0] and (
-                k[1] != key[1] or _SCAN_CACHE[k].sparkSession is not spark
-            ):
-                _evict_locked(k)
-        df = df.cache()
-        _SCAN_CACHE[key] = df
-        while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
-            _evict_locked(next(iter(_SCAN_CACHE)))  # LRU head
-        return df
-
-
 def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
@@ -294,27 +226,13 @@ def translate_search(
     def one_task(blocks: list[BlockEntry]) -> bool:
         return _one_task(spark, blocks, field_types)
 
-    def build() -> DataFrame:
-        schema = metrics_schema(field_types).add(PARTITION_COLUMN, "string")
-        df = spark.read.schema(schema).parquet(block_dir)
-        pred = _range_predicate(cond)
-        if pred is not None:
-            df = df.where(pred)
-        if lim is not None:
-            df = _apply_limit(df, cand, kept, lim.n, tail, one_task)
-        return df
-
-    if q.setting.use_cache:
-        key = (
-            block_dir,
-            Manifest(db_dir, q.metrics).updated_at_nanos(),
-            cond.since_nanos,
-            cond.until_nanos,
-            None if lim is None else (lim.kind, lim.n),
-        )
-        df = _scan_cache_lookup(spark, key, build)
-    else:
-        df = build()
+    schema = metrics_schema(field_types).add(PARTITION_COLUMN, "string")
+    df = spark.read.schema(schema).parquet(block_dir)
+    pred = _range_predicate(cond)
+    if pred is not None:
+        df = df.where(pred)
+    if lim is not None:
+        df = _apply_limit(df, cand, kept, lim.n, tail, one_task)
 
     # results are always ts-ascending (SURVEY §2.4: no ORDER BY exists;
     # data is served sorted), ordered on the long spine before rendering.

@@ -1372,25 +1372,12 @@ def q_ann_ivfpq_join_parity_check(spark, sf_dir):
     b = similarity.ivfpq_topk_join(
         emb, queries, book, k=10, n_cells=32, nprobe=16, centroids=cents
     )
-    cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
-    miss_ab = a.join(b, cols, "left_anti").agg(
-        F.count("*").alias("_only_collect")
-    )
-    miss_ba = b.join(a, cols, "left_anti").agg(
-        F.count("*").alias("_only_join")
-    )
-    stats = a.agg(F.countDistinct("query_id").alias("n_queries"))
-    return stats.crossJoin(miss_ab).crossJoin(miss_ba).select(
-        "n_queries",
-        (
-            (F.col("_only_collect") == 0) & (F.col("_only_join") == 0)
-        ).alias("join_parity_ok"),
-    )
+    return _join_parity(a, b)
 
 
 def _join_parity(a, b):
     """Both-direction anti-join over all four output columns — the
-    shared body of the three collect-vs-join parity gates."""
+    shared body of the four collect-vs-join parity gates."""
     cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
     miss_ab = a.join(b, cols, "left_anti").agg(
         F.count("*").alias("_only_collect")
