@@ -116,14 +116,20 @@ class TestFlightBoundary:
         with pytest.raises(RuntimeError, match="no data found"):
             execute_flight(server.location, q, now_nanos=base)
 
-    def test_error_statuses_are_typed_on_the_wire(self, flight_engine):
+    def test_error_statuses_are_typed_on_the_wire(
+        self, flight_engine, monkeypatch
+    ):
         """A status-code-checking Flight client (raw pyarrow, no
-        wrapper) distinguishes the two reference statuses by TYPE:
-        query error -> INVALID_ARGUMENT (pyarrow surfaces ArrowInvalid)
-        and empty result -> key-not-found (ArrowKeyError), matching
+        wrapper) distinguishes the statuses by TYPE: query error ->
+        INVALID_ARGUMENT (pyarrow surfaces ArrowInvalid) and empty
+        result -> key-not-found (ArrowKeyError), matching
         Status::invalid_argument / Status::not_found in
-        do_get_handler.rs:24,49 — not a generic FlightServerError."""
+        do_get_handler.rs:24,49 — not a generic FlightServerError.
+        A failure that is not a query error is the server's:
+        INTERNAL (FlightInternalError), naming the exception class."""
         import pyarrow as pa
+
+        from zikeiretsu_rs_spark.engine import Engine
 
         _, server, base = flight_engine
         client = fl.FlightClient(server.location)
@@ -137,6 +143,13 @@ class TestFlightBoundary:
                 "select * from trades where ts in ('1999-01-01', '1999-01-02')"
             )
             with pytest.raises(pa.ArrowKeyError, match="no data found"):
+                client.do_get(fl.Ticket(empty_q.encode())).read_all()
+
+            def disk_gone(self, query, now_nanos=None):
+                raise OSError("disk gone")
+
+            monkeypatch.setattr(Engine, "execute_to_arrow", disk_gone)
+            with pytest.raises(fl.FlightInternalError, match="OSError"):
                 client.do_get(fl.Ticket(empty_q.encode())).read_all()
         finally:
             client.close()

@@ -15,7 +15,7 @@ backup/rollback discipline.
 Invariants pinned here:
 
 - a deleted id disappears from probe (and probe_refined) results, and
-  the probe is row-identical to the in-memory collect path over the
+  the probe is row-identical to the in-memory search over the
   LIVE corpus — deletes are invisible to ranking, visible only as
   absence;
 - re-adding a deleted id resurrects it; deleting again (a later

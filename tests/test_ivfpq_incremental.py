@@ -63,7 +63,7 @@ class TestIncrementalParity:
             similarity.ivfpq_probe_lake(spark, one_shot, queries, k=3, nprobe=2)
         )
         mem = _rows(
-            similarity.ivfpq_topk_join(
+            similarity.ivfpq_topk(
                 emb, queries, book, k=3, n_cells=8, nprobe=2, centroids=cents
             )
         )
@@ -431,7 +431,7 @@ class TestPercellEncoding:
             )
         )
         assert inc == _rows(
-            similarity.ivfadc_percell_topk_join(
+            similarity.ivfadc_percell_topk(
                 emb, queries, books, k=3, nprobe=2, centroids=cents
             )
         )

@@ -12,7 +12,7 @@ Invariants pinned here:
   fitted-cell manifest (drift detection keys off the MANIFEST, so a
   crashed run re-converges);
 - refresh strictly improves recall on a drifted fixture (the verdict's
-  done-criterion), and probe ≡ the in-memory collect path under the
+  done-criterion), and probe ≡ the in-memory search under the
   merged post-refresh model (parity);
 - non-drifted cells' codes are BIT-IDENTICAL before and after (the
   frozen-model contract: refresh only touches never-fitted cells);
@@ -197,7 +197,7 @@ class TestRefreshQuality:
     def test_post_refresh_probe_parity_with_inmemory(
         self, spark, emb, split, tmp_path
     ):
-        """Post-refresh store ≡ in-memory collect path under the
+        """Post-refresh store ≡ in-memory search under the
         merged model (seed books for seed cells + refresh books for
         the drifted cell, read back from the lake)."""
         from zikeiretsu_rs_spark.operators import similarity

@@ -621,29 +621,6 @@ class TestPrefixFilterJaccard:
 
 
 class TestProductQuantization:
-    def test_ivfpq_join_row_identical_to_collect_path(self, spark):
-        """`ivfpq_topk_join` (queries stay a DataFrame; probe rows
-        meet PQ codes via one cell equi-join; per-query ADC LUTs are
-        built inside the Arrow scoring pass) must be ROW-IDENTICAL to
-        `ivfpq_topk` under the same codebook/centroids — same float64
-        gather-sums, same probe/tie orders, different distribution
-        strategy (VERDICT r06 item 2)."""
-        import random
-
-        rng = random.Random(11)
-        rows = [(i, [rng.gauss(0, 1) for _ in range(32)]) for i in range(300)]
-        emb = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(6)
-        queries = emb.where("vec_id < 20")
-        book = similarity.pq_codebook(emb, m=8, ksub=16)
-        cents = similarity.sample_centroids(emb, 16, "vec_id", "embedding")
-        a = sorted(map(tuple, similarity.ivfpq_topk(
-            emb, queries, book, k=10, n_cells=16, nprobe=4, centroids=cents
-        ).collect()))
-        b = sorted(map(tuple, similarity.ivfpq_topk_join(
-            emb, queries, book, k=10, n_cells=16, nprobe=4, centroids=cents
-        ).collect()))
-        assert a == b and len(a) > 0
-
     def test_exact_when_codebook_covers_corpus(self, spark):
         """With ksub >= corpus size the hash-sampled codebook contains
         every corpus subvector, so reconstruction is exact and the ADC
@@ -1033,8 +1010,7 @@ class TestPercellResidualIvfPq:
     def test_refined_scores_are_exact_cosines(self, spark):
         """ivfadc_percell_topk_refined: whatever candidates the
         per-cell ADC proposed, the emitted scores are the exact
-        cosines (brute-force values), not the ADC approximations —
-        and the collect/join propose paths agree row-for-row."""
+        cosines (brute-force values), not the ADC approximations."""
         cents, emb = self._planted(spark)
         queries = emb.where(F.col("vec_id") < 3)
         books = similarity.pq_codebook_residual_percell(
@@ -1050,11 +1026,6 @@ class TestPercellResidualIvfPq:
         assert len(got) > 0
         for r in got:
             assert brute[(r["query_id"], r["neighbor_id"])] == r["cosine"]
-        via_join = similarity.ivfadc_percell_topk_refined(
-            emb, queries, books, k=5, expand=2, nprobe=4,
-            centroids=cents, join_path=True,
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, via_join))
 
     def test_refined_zero_norm_candidate_scores_zero(self, spark):
         """Round-9 review finding: the exact re-score tail divides by
@@ -1792,25 +1763,6 @@ class TestIvfadcRefined:
         ).count() / n_exact
         assert rec_ref >= rec_adc, (rec_ref, rec_adc)
         assert rec_ref >= 0.6, rec_ref
-
-    def test_join_path_parity(self, spark):
-        """join_path=True (corpus-scale-query proposal via
-        ivfadc_topk_join) must return the identical refined rows —
-        the proposal twins are row-identical by the existing parity
-        gate, and the exact re-score is deterministic."""
-        emb, cents, book, queries = self._fixture(spark)
-        a = similarity.ivfadc_topk_refined(
-            emb, queries, book, k=5, expand=3, n_cells=3, nprobe=2,
-            centroids=cents, join_path=False,
-        )
-        b = similarity.ivfadc_topk_refined(
-            emb, queries, book, k=5, expand=3, n_cells=3, nprobe=2,
-            centroids=cents, join_path=True,
-        )
-        assert sorted(map(tuple, a.collect())) == sorted(
-            map(tuple, b.collect())
-        )
-
 
 class TestScorerFormulationsAgree:
     def test_dense_and_sparse_jaccard_scorers_identical(self, spark):

@@ -9,7 +9,7 @@ Invariants pinned here:
 - a partitioned-books store encodes BIT-IDENTICAL codes to an inline
   store under the same model (the cogrouped encoder reuses the
   broadcast encoder's per-cell math exactly);
-- partitioned probe ≡ inline probe ≡ collect path, row for row;
+- partitioned probe ≡ inline probe ≡ in-memory search, row for row;
 - the probe never drives the book tensor through the driver (every
   driver materialization primitive is monkeypatch-forbidden while
   the plan is built, except the sanctioned bounded probe-cell list);
@@ -123,7 +123,7 @@ class TestPartitionedBooksProbe:
         ra, rb, rc = _rows(a), _rows(b), _rows(c)
         assert len(ra) > 0
         assert ra == rb, "inline vs partitioned probe diverged"
-        assert rb == rc, "partitioned probe vs collect path diverged"
+        assert rb == rc, "partitioned probe vs in-memory search diverged"
 
     def test_probe_never_collects_books_at_driver(
         self, spark, emb, stores
@@ -303,19 +303,17 @@ class TestProbeRefined:
     ):
         """`IvfpqLakeIndex.probe_refined` (round 10 — the production
         two-stage shape over the stored index) must be row-identical
-        to the in-memory `ivfadc_percell_topk_refined(join_path=True)`
-        under the same model, for BOTH book layouts: the proposals
-        come from the (already parity-gated) lake probe and the exact
-        re-score is the ONE shared `_exact_rescore` tail. And the
-        broadcast-queries fast path must change the plan, not the
-        rows."""
+        to the in-memory `ivfadc_percell_topk_refined` under the same
+        model, for BOTH book layouts: the proposals come from the
+        (already parity-gated) lake probe and the exact re-score is
+        the ONE shared `_exact_rescore` tail."""
         from zikeiretsu_rs_spark.operators import similarity
 
         cents, books = model
         queries = emb.where(F.col("vec_id") < 6)
         mem = similarity.ivfadc_percell_topk_refined(
             emb, queries, books, k=5, expand=3, nprobe=3,
-            centroids=cents, join_path=True,
+            centroids=cents,
         )
         want = _rows(mem)
         assert len(want) > 0
@@ -325,13 +323,6 @@ class TestProbeRefined:
                 idx.probe_refined(queries, emb, k=5, expand=3, nprobe=3)
             )
             assert got == want, path
-        got_b = _rows(
-            similarity.IvfpqLakeIndex(spark, stores[1]).probe_refined(
-                queries, emb, k=5, expand=3, nprobe=3,
-                broadcast_queries=True,
-            )
-        )
-        assert got_b == want
 
 
 class TestBuildValidation:

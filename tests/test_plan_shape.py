@@ -27,6 +27,31 @@ def plan_of(spark, df) -> str:
     return jexec.explainString(mode)
 
 
+def plan_without_collect(spark, build) -> str:
+    """Run `build()` with every driver-side materialization primitive
+    (collect/toPandas/first/take/head) raising, and return the built
+    DataFrame's formatted plan. Patches the CLASSIC DataFrame class:
+    Spark 4 instances resolve collect/toPandas/... there, so patching
+    the pyspark.sql base class never intercepts anything (round-10
+    fix — the tripwire was dead as originally written)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def boom(*a, **k):
+        raise AssertionError("driver-side materialization during plan build")
+
+    saved = {
+        n: getattr(DataFrame, n)
+        for n in ("collect", "toPandas", "first", "take", "head")
+    }
+    try:
+        for n in saved:
+            setattr(DataFrame, n, boom)
+        return plan_of(spark, build())
+    finally:
+        for n, f in saved.items():
+            setattr(DataFrame, n, f)
+
+
 class TestPushdown:
     def test_ts_range_pushes_to_scan(self, spark):
         df = suite.QUERIES["ts_range_scan"](spark, SF_DIR)
@@ -647,46 +672,26 @@ class TestRound6PlanShapes:
 
 class TestRound7PlanShapes:
     def test_ivfpq_join_never_materializes_queries(self, spark):
-        """VERDICT r06 item 2: the corpus-scale-queries IVFPQ variant
-        must keep the query set distributed — NO DataFrame
-        materialization of any kind while the plan is constructed.
-        Pinned by making every driver-side materialization primitive
-        raise during construction; the plan must still build, carry
-        the probe-side join on `cell`, and keep the scoring in an
-        Arrow pass (no row-at-a-time Python)."""
-        # the CLASSIC DataFrame class: Spark 4 instances resolve
-        # collect/toPandas/... there, so patching the pyspark.sql
-        # base class never intercepts anything (round-10 fix — the
-        # tripwire was dead as originally written)
-        from pyspark.sql.classic.dataframe import DataFrame
-
+        """VERDICT r06 item 2: the IVFPQ search must keep the query set
+        distributed — NO DataFrame materialization of any kind while
+        the plan is constructed. Pinned by making every driver-side
+        materialization primitive raise during construction; the plan
+        must still build, carry the probe-side join on `cell`, and
+        keep the scoring in an Arrow pass (no row-at-a-time
+        Python)."""
         from zikeiretsu_rs_spark.operators import similarity
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         queries = emb.where(suite.F.col("vec_id") < 10)
         book = similarity.pq_codebook(emb, m=16, ksub=16)
         cents = similarity.sample_centroids(emb, 8, "vec_id", "embedding")
-
-        def boom(*a, **k):
-            raise AssertionError(
-                "driver-side materialization during ivfpq_topk_join"
-            )
-
-        saved = {
-            n: getattr(DataFrame, n)
-            for n in ("collect", "toPandas", "first", "take", "head")
-        }
-        try:
-            for n in saved:
-                setattr(DataFrame, n, boom)
-            df = similarity.ivfpq_topk_join(
+        plan = plan_without_collect(
+            spark,
+            lambda: similarity.ivfpq_topk(
                 emb, queries, book, k=5, n_cells=8, nprobe=3,
                 centroids=cents,
-            )
-            plan = plan_of(spark, df)
-        finally:
-            for n, f in saved.items():
-                setattr(DataFrame, n, f)
+            ),
+        )
         # probe rows meet codes via a cell equi-join, scored in Arrow
         assert "cell" in plan, plan[:4000]
         assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") >= 1, (
@@ -724,19 +729,13 @@ class TestRound8PlanShapes:
         assert n_scans == 1, n_scans
 
     def test_pq_and_ivfadc_joins_never_materialize_queries(self, spark):
-        """VERDICT r07 item 5: the corpus-scale-queries twins for the
-        flat ADC scan (`pq_topk_join`, hash-block replication) and
-        IVFADC (`ivfadc_topk_join`, residual cell equi-join) carry
-        the same no-driver-materialization contract as
-        `ivfpq_topk_join`: every driver-side materialization
-        primitive raises while the plans are constructed, and the
-        built plans join + score in Arrow with no cartesian."""
-        # the CLASSIC DataFrame class: Spark 4 instances resolve
-        # collect/toPandas/... there, so patching the pyspark.sql
-        # base class never intercepts anything (round-10 fix — the
-        # tripwire was dead as originally written)
-        from pyspark.sql.classic.dataframe import DataFrame
-
+        """VERDICT r07 item 5: the flat ADC scan (`pq_topk`,
+        hash-block replication) and IVFADC (`ivfpq_residual_topk`,
+        residual cell equi-join) carry the same
+        no-driver-materialization contract as `ivfpq_topk`: every
+        driver-side materialization primitive raises while the plans
+        are constructed, and the built plans join + score in Arrow
+        with no cartesian."""
         from zikeiretsu_rs_spark.operators import similarity
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -744,29 +743,16 @@ class TestRound8PlanShapes:
         book = similarity.pq_codebook(emb, m=16, ksub=16)
         cents = similarity.sample_centroids(emb, 8, "vec_id", "embedding")
         rbook = similarity.pq_codebook_residual(emb, cents, m=16, ksub=16)
-
-        def boom(*a, **k):
-            raise AssertionError(
-                "driver-side materialization during join-twin build"
-            )
-
-        saved = {
-            n: getattr(DataFrame, n)
-            for n in ("collect", "toPandas", "first", "take", "head")
-        }
-        try:
-            for n in saved:
-                setattr(DataFrame, n, boom)
-            pq_df = similarity.pq_topk_join(emb, queries, book, k=5)
-            pq_plan = plan_of(spark, pq_df)
-            adc_df = similarity.ivfadc_topk_join(
+        pq_plan = plan_without_collect(
+            spark, lambda: similarity.pq_topk(emb, queries, book, k=5)
+        )
+        adc_plan = plan_without_collect(
+            spark,
+            lambda: similarity.ivfpq_residual_topk(
                 emb, queries, rbook, k=5, n_cells=8, nprobe=3,
                 centroids=cents,
-            )
-            adc_plan = plan_of(spark, adc_df)
-        finally:
-            for n, f in saved.items():
-                setattr(DataFrame, n, f)
+            ),
+        )
         assert "_blk" in pq_plan, pq_plan[:4000]
         assert "cell" in adc_plan, adc_plan[:4000]
         for plan in (pq_plan, adc_plan):
@@ -815,7 +801,7 @@ class TestRound8PlanShapes:
         ]
         assert pf and "cell#" in pf[0], plan[:4000]
 
-        mem = similarity.ivfpq_topk_join(
+        mem = similarity.ivfpq_topk(
             emb, queries, book, k=3, n_cells=8, nprobe=2, centroids=cents
         )
         assert sorted(map(tuple, probe.collect())) == sorted(
@@ -885,21 +871,14 @@ class TestRound8PlanShapes:
 
 class TestRound9PlanShapes:
     def test_percell_join_never_materializes_queries(self, spark):
-        """The round-9 per-cell IVFADC join twin
-        (`ivfadc_percell_topk_join`) carries the same
-        no-driver-materialization contract as the other three search
-        formulations' join twins: every driver-side materialization
-        primitive raises while the plan is constructed (the per-cell
-        model itself is fitted BEFORE the pin — it is a bounded model
-        artifact, the sanctioned collect class), and the built plan
-        joins probe rows to per-cell codes on `cell` and scores in
-        Arrow with no cartesian."""
-        # the CLASSIC DataFrame class: Spark 4 instances resolve
-        # collect/toPandas/... there, so patching the pyspark.sql
-        # base class never intercepts anything (round-10 fix — the
-        # tripwire was dead as originally written)
-        from pyspark.sql.classic.dataframe import DataFrame
-
+        """The round-9 per-cell IVFADC search (`ivfadc_percell_topk`)
+        carries the same no-driver-materialization contract as the
+        other three search formulations: every driver-side
+        materialization primitive raises while the plan is
+        constructed (the per-cell model itself is fitted BEFORE the
+        pin — it is a bounded model artifact, the sanctioned collect
+        class), and the built plan joins probe rows to per-cell codes
+        on `cell` and scores in Arrow with no cartesian."""
         from zikeiretsu_rs_spark.operators import similarity
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -908,27 +887,55 @@ class TestRound9PlanShapes:
         books = similarity.pq_codebook_residual_percell(
             emb, cents, m=16, ksub=16
         )
-
-        def boom(*a, **k):
-            raise AssertionError(
-                "driver-side materialization during percell join build"
-            )
-
-        saved = {
-            n: getattr(DataFrame, n)
-            for n in ("collect", "toPandas", "first", "take", "head")
-        }
-        try:
-            for n in saved:
-                setattr(DataFrame, n, boom)
-            df = similarity.ivfadc_percell_topk_join(
+        plan = plan_without_collect(
+            spark,
+            lambda: similarity.ivfadc_percell_topk(
                 emb, queries, books, k=5, nprobe=3, centroids=cents,
-            )
-            plan = plan_of(spark, df)
-        finally:
-            for n, f in saved.items():
-                setattr(DataFrame, n, f)
+            ),
+        )
         assert "cell" in plan, plan[:4000]
+        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") >= 1, (
+            plan[:4000]
+        )
+        assert "CartesianProduct" not in plan, plan[:4000]
+
+    @pytest.mark.parametrize(
+        "search",
+        [
+            "pq_topk_refined",
+            "ivfadc_topk_refined",
+            "ivfadc_percell_topk_refined",
+        ],
+    )
+    def test_refined_searches_never_materialize_queries(self, spark, search):
+        """The refined (+R) searches keep the queries a DataFrame
+        through both stages: the ADC proposal and the exact re-score
+        build with every driver-side materialization primitive
+        raising, and the re-score joins the float vectors back on
+        `query_id` with no cartesian."""
+        from zikeiretsu_rs_spark.operators import similarity
+
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        queries = emb.where(suite.F.col("vec_id") < 10)
+        cents = similarity.sample_centroids(emb, 8, "vec_id", "embedding")
+        probe = {"nprobe": 3, "centroids": cents}
+        if search == "pq_topk_refined":
+            model, kwargs = similarity.pq_codebook(emb, m=16, ksub=16), {}
+        elif search == "ivfadc_topk_refined":
+            model = similarity.pq_codebook_residual(emb, cents, m=16, ksub=16)
+            kwargs = probe
+        else:
+            model = similarity.pq_codebook_residual_percell(
+                emb, cents, m=16, ksub=16
+            )
+            kwargs = probe
+        plan = plan_without_collect(
+            spark,
+            lambda: getattr(similarity, search)(
+                emb, queries, model, k=5, expand=2, **kwargs
+            ),
+        )
+        assert "query_id" in plan, plan[:4000]
         assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") >= 1, (
             plan[:4000]
         )

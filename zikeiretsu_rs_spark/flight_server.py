@@ -18,6 +18,12 @@ do_get_handler.rs:16-55). Exactly like the reference:
   do_get_handler.rs:24) and an empty result to NOT_FOUND
   (`Status::not_found("no data found")`, do_get_handler.rs:49).
 
+Errors say whose fault they are: a query error is any
+`ZikeiretsuError` (parse, analysis, output, storage) and is the
+client's; any other exception while executing is the server's and
+maps to INTERNAL (`FlightInternalError`). Both messages keep the
+exception class name.
+
 The transport is pyarrow.flight, which bundles the gRPC C++ stack —
 no grpcio wheel required. This is the engine's one remote boundary:
 the wire-compatible Flight endpoint any Flight client can dial.
@@ -44,6 +50,7 @@ except ImportError:  # pragma: no cover
     FLIGHT_AVAILABLE = False
 
 from .engine import Engine
+from .errors import ZikeiretsuError
 
 
 def _output_condition_json(oc) -> bytes:
@@ -88,13 +95,17 @@ if FLIGHT_AVAILABLE:
             try:
                 with self._lock:
                     table, iq = self.engine.execute_to_arrow(query, now_nanos)
-            except Exception as e:  # parse/plan/exec -> INVALID_ARGUMENT
+            except ZikeiretsuError as e:  # the client's query
                 # pyarrow maps ArrowInvalid raised in a handler to the
                 # gRPC INVALID_ARGUMENT status (Status::invalid_argument
                 # parity, do_get_handler.rs:24) — a status-checking
                 # client sees the typed code, not a generic server error
                 raise pa.ArrowInvalid(
                     f"invalid argument :{type(e).__name__}: {e}"
+                )
+            except Exception as e:  # the server's fault -> INTERNAL
+                raise flight.FlightInternalError(
+                    f"internal error :{type(e).__name__}: {e}"
                 )
             if table.num_rows == 0:
                 # reference: Status::not_found("no data found");

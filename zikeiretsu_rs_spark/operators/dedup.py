@@ -142,7 +142,9 @@ def ngram_jaccard_pairs(
     # the re-explode yields exactly the old distinct rows, and the set
     # size is the _sz value — one id-keyed exchange, no window. Sizes
     # are computed BEFORE any doc-freq filtering, as before — the
-    # Jaccard denominator uses full set sizes.
+    # Jaccard denominator uses full set sizes. Memory bound: one
+    # document's distinct shingles must fit in one task's memory (the
+    # set is a single row; see SCALE.md's max-document-size line).
     sized = (
         sh.groupBy(id_col)
         .agg(F.collect_set("shingle").alias("_set"))
@@ -351,7 +353,8 @@ def exact_jaccard_for_pairs(
         # re-derivation. collect_set IS the distinct (map-side partial
         # aggregation), so every re-derivation now costs ONE id-keyed
         # exchange, the size is free (size(_set)), and the explodes
-        # back to rows stay id-partitioned.
+        # back to rows stay id-partitioned. Memory bound: one
+        # document's distinct shingles must fit in one task's memory.
         sets = (
             word_shingles(src, id_col, text_col, n, distinct=False)
             .groupBy(id_col)
@@ -424,7 +427,9 @@ def exact_jaccard_for_pairs(
     # map-side (in-doc duplicate shingles never leave their task), so
     # the same set arrays come out of ONE id-keyed exchange. Element
     # order differs (both formulations were unordered); consumers
-    # take only size/array_intersect, which are order-free.
+    # take only size/array_intersect, which are order-free. Memory
+    # bound: one document's distinct shingles must fit in one task's
+    # memory.
     sets = (
         word_shingles(df, id_col, text_col, n, distinct=False)
         .groupBy(id_col)
@@ -867,6 +872,8 @@ def ranked_prefixes(
     # distinct rows. (With hash_shingles a 64-bit in-doc collision now
     # also merges inside the set — the same "collision can only merge
     # two shingles" trade the docstring already makes for the join.)
+    # Memory bound: one document's distinct shingles must fit in one
+    # task's memory.
     sh = word_shingles(base, id_col, text_col, n, distinct=False)
     if hash_shingles:
         sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))

@@ -1238,106 +1238,131 @@ def pq_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codes: DataFrame | None = None,
+    n_blocks: int = 32,
 ) -> DataFrame:
     """Approximate cosine top-k by asymmetric distance computation
     (ADC): each query precomputes an (m, ksub) lookup table of
     subspace dot products; a coded corpus vector scores as the sum of
     m table lookups, normalized by |q| and the reconstruction norm
     (both also table-derived). The scan never touches the float
-    vectors — only the m-byte codes — and each Arrow batch emits just
-    its per-query top-k, so the global merge sees
-    (n_batches * n_queries * k) rows, not the corpus.
+    vectors — only the m-byte codes.
 
-    The probe set is collected driver-side (bounded, same sanction as
-    the centroid pulls); exact re-scoring of the final candidates
-    against the float column is the usual refinement step and is what
+    Queries stay a DataFrame end to end, so a query set may itself be
+    corpus-scale. A flat ADC scan has no coarse quantizer to join on —
+    every query must score every code — so the distributed shape is
+    BLOCK REPLICATION: the coded corpus is salted into `n_blocks` hash
+    blocks, each query row is replicated once per block (an
+    `explode(sequence(...))`, shuffle volume n_queries x n_blocks —
+    bounded and tiny next to the corpus), and one `_blk` equi-join
+    lands each query against each block's codes exactly once. Each
+    block is scored as a cell with a zero reconstruction centroid by
+    the one ADC kernel, `_adc_score`. Candidate volume is inherently
+    n_queries x n_corpus (that is what a flat PQ scan IS); blocking
+    only distributes it — each join task scores n_corpus/n_blocks
+    codes, AQE-splittable.
+
+    Exact re-scoring of the final candidates against the float column
+    is the usual refinement step (`pq_topk_refined`) and is what
     `ann_pq_recall_check` measures the raw ADC ranking against.
 
     Output: query_id, neighbor_id, adc_cosine (round 6), rank (1..k,
     ties by neighbor id).
     """
-    import heapq
-
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    cmat = np.array(codebook, dtype=np.float64)  # (m, ksub, dsub)
-    m, ksub, dsub = cmat.shape
-    c_sq = (cmat * cmat).sum(axis=2)  # (m, ksub)
-    qrows = (
+    dim = len(codebook) * len(codebook[0][0])
+    codes = pq_encode(corpus, codebook, id_col, vec_col).withColumn(
+        "_blk",
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int"),
+    )
+    probes = (
         with_double_vec(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), "_vec")
-        .collect()
-    )
-    qids = [r["query_id"] for r in qrows]
-    qmat = np.array([r["_vec"] for r in qrows], dtype=np.float64).reshape(
-        len(qids), m, dsub
-    )
-    qnorm = np.sqrt((qmat.reshape(len(qids), -1) ** 2).sum(axis=1))
-    luts = np.einsum("qmd,mkd->qmk", qmat, cmat)  # (nq, m, ksub)
-
-    if codes is None:
-        codes = pq_encode(corpus, codebook, id_col, vec_col)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
+        .select(F.col(id_col).alias("query_id"), F.col("_vec").alias("_qvec"))
+        .withColumn(
+            "_blk",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(n_blocks - 1))
             ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            ar = np.arange(m)
-            # reconstruction norm of each coded vector from c_sq
-            rnorm = np.sqrt(c_sq[ar[None, :], cd].sum(axis=1))  # (n,)
-            ids = pdf[id_col].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                num = luts[qi][ar[None, :], cd].sum(axis=1)  # (n,)
-                denom = qnorm[qi] * rnorm
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                # self-matches are excluded, matching cosine_topk
-                cand = [i for i in range(n) if ids[i] != qids[qi]]
-                top = heapq.nsmallest(
-                    min(k, len(cand)), cand, key=lambda i: (-cos[i], ids[i])
-                )
-                for i in top:
-                    out_q.append(qids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(cos[i])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = codes.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
         )
+        .withColumn("_blk", F.col("_blk").cast("int"))
+    )
+    joined = (
+        probes.join(codes, "_blk")
+        .where(F.col("query_id") != F.col(id_col))
+        .withColumnRenamed("_blk", "cell")
+    )
+    return _adc_score(
+        joined,
+        np.zeros((n_blocks, dim)),
+        codebook,
+        k,
+        qid_type=queries.schema[id_col].dataType,
+        nid_type=corpus.schema[id_col].dataType,
+        nid_name=id_col,
+    )
+
+
+def _ivfadc_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    books,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    residual: bool,
+) -> DataFrame:
+    """The one inverted-list ADC pipeline behind `ivfpq_topk`,
+    `ivfpq_residual_topk` and `ivfadc_percell_topk` (the IVFADC
+    ladder of Jegou et al., TPAMI'11, as two parameters):
+
+    - `residual`: the corpus stores PQ codes of x - centroid[cell]
+      (IVFADC) or of x itself (IVFPQ raw codes, scored with zero
+      reconstruction centroids);
+    - `books`: one shared (m, ksub, dsub) codebook, or per-cell
+      (n_cells, m, ksub, dsub) books.
+
+    Queries stay a DataFrame end to end: both sides are assigned
+    cells by Arrow matmul (the query side via
+    `assign_probe_cells_arrow`, nprobe rows per query), one `cell`
+    equi-join lands each query's probe rows next to the codes in its
+    probed cells — the (nprobe / n_cells) scan fraction falls out of
+    the join — and `_adc_score` ranks them. Skewed cells split under
+    AQE because the join is a plain shuffle equi-join. Only the model
+    artifacts (codebook, centroids) enter the plan as literals;
+    nothing query-side is collected (plan-pinned in
+    tests/test_plan_shape.py).
+    """
+    import numpy as np
+
+    if residual:
+        coded = residual_encode_percell(
+            corpus, centroids, books, id_col, vec_col
+        )
+        recon = centroids
+    else:
+        cells = assign_cells_arrow(
+            corpus, centroids, id_col, vec_col, metric="dot"
+        ).select(F.col(id_col), "cell")
+        coded = pq_encode(corpus, books, id_col, vec_col).join(
+            cells, id_col
+        )
+        recon = np.zeros((len(centroids), len(centroids[0])))
+    probes = assign_probe_cells_arrow(
+        queries, centroids, nprobe, id_col, vec_col
+    )
+    joined = probes.join(coded, "cell").where(
+        F.col("query_id") != F.col(id_col)
+    )
+    return _adc_score(
+        joined,
+        recon,
+        books,
+        k,
+        qid_type=queries.schema[id_col].dataType,
+        nid_type=corpus.schema[id_col].dataType,
+        nid_name=id_col,
     )
 
 
@@ -1361,121 +1386,21 @@ def ivfpq_topk(
     `cell` and partition pruning does it for free), codes shrink what
     remains.
 
-    This variant encodes RAW vectors (IVFFlat-with-codes); classic
-    residual encoding (encode x - centroid[cell]) is a quality
-    upgrade that needs per-cell LUTs (m*ksub*nprobe entries per
-    query) — same plan shape, noted here for parity with the paper.
+    This variant encodes RAW vectors (IVFFlat-with-codes);
+    `ivfpq_residual_topk` is the residual-encoding rung of the same
+    pipeline (`_ivfadc_topk`).
 
-    Probe selection mirrors ivf_topk's raw-dot coarse quantizer; cell
+    Probe selection uses ivf_topk's raw-dot coarse quantizer; cell
     assignment uses the Arrow matmul path (IVFPQ cell counts always
     exceed the expression cliff in practice).
 
     Output: query_id, neighbor_id, adc_cosine (round 6), rank.
     """
-    import heapq
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     if centroids is None:
         centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-    cmat_coarse = np.array(centroids, dtype=np.float64)  # (n_cells, dim)
-    pmat = np.array(codebook, dtype=np.float64)  # (m, ksub, dsub)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)
-
-    # inverted lists: cell via Arrow matmul, codes via the PQ encoder —
-    # one pass each, joined on id (in a lake deployment both columns
-    # are written together, partitioned by cell)
-    cells = assign_cells_arrow(
-        corpus, centroids, id_col, vec_col, metric="dot"
-    ).select(F.col(id_col), "cell")
-    codes = pq_encode(corpus, codebook, id_col, vec_col)
-    coded = codes.join(cells, id_col)
-
-    qrows = (
-        with_double_vec(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), "_vec")
-        .collect()
-    )
-    qids = [r["query_id"] for r in qrows]
-    qmat = np.array([r["_vec"] for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    # raw-dot coarse scores, ties to the highest cell (ivf_topk parity)
-    qscores = qmat @ cmat_coarse.T  # (nq, n_cells)
-    order = np.argsort(-qscores, axis=1, kind="stable")
-    probes = [set(int(c) for c in order[i, :nprobe]) for i in range(len(qids))]
-    luts = np.einsum(
-        "qmd,mkd->qmk", qmat.reshape(len(qids), m, dsub), pmat
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
-            ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def batches(it):
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells_b = pdf["cell"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            rnorm = np.sqrt(p_sq[ar[None, :], cd].sum(axis=1))
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                cand = [
-                    i
-                    for i in range(n)
-                    if cells_b[i] in probes[qi] and ids[i] != qids[qi]
-                ]
-                if not cand:
-                    continue
-                num = luts[qi][ar[None, :], cd[cand]].sum(axis=1)
-                denom = qnorm[qi] * rnorm[cand]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                pos = {c: j for j, c in enumerate(cand)}
-                top = heapq.nsmallest(
-                    min(k, len(cand)),
-                    cand,
-                    key=lambda i: (-cos[pos[i]], ids[i]),
-                )
-                for i in top:
-                    out_q.append(qids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(cos[pos[i]])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = coded.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
+    return _ivfadc_topk(
+        corpus, queries, codebook, k, nprobe, id_col, vec_col,
+        centroids, residual=False,
     )
 
 
@@ -1488,11 +1413,12 @@ def assign_probe_cells_arrow(
 ) -> DataFrame:
     """Coarse probe assignment for a DISTRIBUTED query set: one row
     per (query, probed cell), nprobe rows per query, carrying the
-    query vector for downstream ADC scoring. The Arrow twin of
-    `ivfpq_topk`'s driver-side probe selection — same raw-dot scores,
-    same stable-argsort tie order (ties to the LOWEST cell index) —
-    so the join-based search scores exactly the cells the collect
-    path scores.
+    query vector for downstream ADC scoring: raw-dot coarse scores
+    (ivf_topk's quantizer), stable-argsort tie order (ties to the
+    LOWEST cell index). Every inverted-list search (`_ivfadc_topk`)
+    and the lake probe (`IvfpqLakeIndex.probe`) pick their cells
+    here, so an in-memory search and a lake probe over the same model
+    score exactly the same cells.
 
     Output: query_id, _qvec (array<double>), cell.
     """
@@ -1531,160 +1457,6 @@ def assign_probe_cells_arrow(
     return src.mapInPandas(batches, schema)
 
 
-def ivfpq_topk_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebook: list[list[list[float]]],
-    k: int = 10,
-    n_cells: int = 32,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """`ivfpq_topk` for CORPUS-SCALE query sets (VERDICT r06 item 2):
-    queries stay a DataFrame end to end — embedding-level
-    decontamination of one corpus against another, cross-corpus
-    near-neighbor audits, any shape where the "query batch" is itself
-    millions of rows and a driver-side collect would OOM the driver.
-
-    Plan shape: both sides are assigned cells by Arrow matmul (the
-    query side via `assign_probe_cells_arrow`, nprobe rows per
-    query), then a single `cell` equi-join lands each query's probe
-    rows next to the PQ codes in its probed cells — the
-    (nprobe / n_cells) scan fraction falls out of the join instead of
-    a driver-side probe filter. ADC scoring runs in one Arrow pass
-    over the join output: per record batch, one (m, ksub) LUT per
-    DISTINCT query in the batch (einsum), gather-sum over the m-byte
-    codes, and a batch-local top-k per query, so the global window
-    sees (batches x queries_in_batch x k) rows, never the joined
-    candidate volume. Skewed cells split under AQE because the join
-    is a plain shuffle equi-join — no unsplittable per-query state.
-
-    Scores are the same float64 gather-sums as the collect path, so
-    outputs are row-identical under the same codebook/centroids
-    (pinned by `ann_ivfpq_join_parity_check` and pytest). Only the
-    model artifacts (codebook, centroids) enter the plan as
-    literals; NOTHING query-side is collected (plan-pinned:
-    tests/test_plan_shape.py monkeypatches DataFrame.collect to raise
-    while this plan is constructed).
-
-    Output: query_id, neighbor_id, adc_cosine (round 6), rank.
-    """
-    if centroids is None:
-        centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-
-    cells = assign_cells_arrow(
-        corpus, centroids, id_col, vec_col, metric="dot"
-    ).select(F.col(id_col), "cell")
-    codes = pq_encode(corpus, codebook, id_col, vec_col)
-    coded = codes.join(cells, id_col)
-
-    probes = assign_probe_cells_arrow(
-        queries, centroids, nprobe, id_col, vec_col
-    )
-    joined = probes.join(coded, "cell").where(
-        F.col("query_id") != F.col(id_col)
-    )
-    return _adc_score_joined(
-        joined,
-        codebook,
-        k,
-        qid_type=queries.schema[id_col].dataType,
-        nid_type=corpus.schema[id_col].dataType,
-        nid_name=id_col,
-    )
-
-
-def _adc_score_joined(
-    joined: DataFrame,
-    codebook: list[list[list[float]]],
-    k: int,
-    qid_type,
-    nid_type,
-    nid_name: str,
-) -> DataFrame:
-    """Shared ADC scoring tail of the join-based PQ searches: one
-    Arrow pass over (query_id, _qvec, codes, <nid_name>) joined rows —
-    one (m, ksub) LUT per DISTINCT query per record batch (the join
-    key clusters each query's candidates into contiguous runs),
-    gather-sum over the m-byte codes, batch-local top-k — then the
-    global per-query window merge. Same float64 gather-sums as the
-    collect paths (parity gates)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    pmat = np.array(codebook, dtype=np.float64)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, True),
-            T.StructField("neighbor_id", nid_type, True),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def batches(it):
-        import heapq
-
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            rnorm = np.sqrt(p_sq[ar[None, :], cd].sum(axis=1))
-            nids = pdf[nid_name].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qid, idx in pdf.groupby(
-                "query_id", sort=False
-            ).indices.items():
-                qvec = np.array(pdf["_qvec"].iloc[idx[0]], dtype=np.float64)
-                qn = np.sqrt((qvec * qvec).sum())
-                lut = np.einsum(
-                    "qmd,mkd->qmk", qvec.reshape(1, m, dsub), pmat
-                )[0]
-                num = lut[ar[None, :], cd[idx]].sum(axis=1)
-                denom = qn * rnorm[idx]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                top = heapq.nsmallest(
-                    min(k, len(idx)),
-                    range(len(idx)),
-                    key=lambda i: (-cos[i], nids[idx[i]]),
-                )
-                for i in top:
-                    out_q.append(qid)
-                    out_n.append(nids[idx[i]])
-                    out_s.append(cos[i])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = joined.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
-    )
-
-
 def _exact_rescore(
     cand: DataFrame,
     corpus: DataFrame,
@@ -1692,15 +1464,13 @@ def _exact_rescore(
     k: int,
     id_col: str,
     vec_col: str,
-    broadcast_queries: bool,
 ) -> DataFrame:
     """Shared exact re-scoring tail of ALL refined (+R) searches: the
     proposed (query_id, neighbor_id) candidates join back to the float
     vectors, exact cosine, per-query top-k window. One implementation
-    so a scoring change never has to land in three places.
-
-    `broadcast_queries=False` for corpus-scale query sets (the join
-    twins' contract — an unhinted equi-join left to AQE).
+    so a scoring change never has to land in three places. The query
+    side is never hinted: a corpus-scale query set would blow the
+    broadcast limit, so the equi-join is left to AQE.
 
     Zero-norm vectors score 0.0 — the SAME convention every ADC scan
     kernel applies via `np.where(denom > 0, ..., 0.0)`; guarded with
@@ -1720,7 +1490,7 @@ def _exact_rescore(
     denom = F.col("_cn") * F.col("_qn")
     scored = (
         cand.join(c, "neighbor_id")
-        .join(F.broadcast(q) if broadcast_queries else q, "query_id")
+        .join(q, "query_id")
         .withColumn(
             "cosine",
             F.when(
@@ -1763,10 +1533,7 @@ def pq_topk_refined(
         corpus, queries, codebook, k=k * expand, id_col=id_col,
         vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    return _exact_rescore(
-        cand, corpus, queries, k, id_col, vec_col,
-        broadcast_queries=True,
-    )
+    return _exact_rescore(cand, corpus, queries, k, id_col, vec_col)
 
 
 def pq_codebook_residual(
@@ -1875,60 +1642,6 @@ def pq_codebook_residual_kmeans(
     return book
 
 
-def residual_encode(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVFADC corpus encoding in one Arrow pass: coarse cell by raw
-    dot, then PQ codes of the residual (x - centroid[cell]) per
-    subspace via the -2·dot + |c|² argmin (the |r|² term is constant
-    per row). Shared by the collect-path and join-path searches so
-    their candidate codes are bit-identical.
-
-    Output: id_col, cell (int), codes (array<int>, length m).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    cmat = np.array(centroids, dtype=np.float64)
-    pmat = np.array(codebook, dtype=np.float64)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)
-    src = with_double_vec(corpus, vec_col).select(F.col(id_col), "_vec")
-    schema = T.StructType(
-        [
-            T.StructField(id_col, corpus.schema[id_col].dataType, True),
-            T.StructField("cell", T.IntegerType(), True),
-            T.StructField("codes", T.ArrayType(T.IntegerType()), True),
-        ]
-    )
-
-    def encode(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vecs = np.array(list(pdf["_vec"]), dtype=np.float64)
-            cells = np.argmax(vecs @ cmat.T, axis=1)
-            res = (vecs - cmat[cells]).reshape(n, m, dsub)
-            dots = np.einsum("nmd,mkd->nmk", res, pmat)
-            codes = np.argmin(p_sq[None, :, :] - 2.0 * dots, axis=2)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": cells.astype(np.int32),
-                    "codes": list(codes.astype(np.int32)),
-                }
-            )
-
-    return src.mapInPandas(encode, schema)
-
-
 def ivfpq_residual_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1949,123 +1662,18 @@ def ivfpq_residual_topk(
       |x̂|²     = |centroid|² + 2·Σ_m cross_cell[m][code_m] + Σ_m |c|²
 
     where LUT_q = q-subspace · codebook and cross_cell = centroid-
-    subspace · codebook are (m, ksub) tables computed driver-side per
-    probed cell (nprobe·m·ksub floats per query — broadcast-scale).
-    The scan still touches only (cell, m bytes) per row.
+    subspace · codebook are (m, ksub) tables (`_adc_score` builds one
+    LUT per query and one cross table per scored cell). The scan still
+    touches only (cell, m bytes) per row. The shared codebook rides
+    the encoder and kernel closures once; every cell indexes it.
 
     Output: query_id, neighbor_id, adc_cosine (round 6), rank.
     """
-    import heapq
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     if centroids is None:
         centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-    cmat = np.array(centroids, dtype=np.float64)  # (n_cells, dim)
-    n_cells = cmat.shape[0]
-    pmat = np.array(codebook, dtype=np.float64)  # (m, ksub, dsub)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)  # (m, ksub)
-    cent_sq = (cmat * cmat).sum(axis=1)  # (n_cells,)
-    # cross_cell[c][m][k] = centroid_c subspace m · codebook[m][k]
-    cent_sub = cmat.reshape(n_cells, m, dsub)
-    cross = np.einsum("cmd,mkd->cmk", cent_sub, pmat)
-
-    # corpus side: cell + residual codes (one Arrow pass, shared with
-    # the join twin)
-    coded = residual_encode(corpus, centroids, codebook, id_col, vec_col)
-
-    qrows = (
-        with_double_vec(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), "_vec")
-        .collect()
-    )
-    qids = [r["query_id"] for r in qrows]
-    qmat = np.array([r["_vec"] for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    q_dot_cent = qmat @ cmat.T  # (nq, n_cells)
-    order = np.argsort(-q_dot_cent, axis=1, kind="stable")
-    probes = [set(int(c) for c in order[i, :nprobe]) for i in range(len(qids))]
-    luts = np.einsum("qmd,mkd->qmk", qmat.reshape(len(qids), m, dsub), pmat)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
-            ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def score(it):
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells_b = pdf["cell"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            res_sq = p_sq[ar[None, :], cd].sum(axis=1)  # Σ|c_code|²
-            cross_term = cross[cells_b[:, None], ar[None, :], cd].sum(
-                axis=1
-            )  # Σ cent·c_code
-            recon_sq = cent_sq[cells_b] + 2.0 * cross_term + res_sq
-            rnorm = np.sqrt(np.maximum(recon_sq, 0.0))
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                mask = np.array(
-                    [
-                        cells_b[i] in probes[qi] and ids[i] != qids[qi]
-                        for i in range(n)
-                    ]
-                )
-                if not mask.any():
-                    continue
-                idx = np.nonzero(mask)[0]
-                num = (
-                    q_dot_cent[qi][cells_b[idx]]
-                    + luts[qi][ar[None, :], cd[idx]].sum(axis=1)
-                )
-                denom = qnorm[qi] * rnorm[idx]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                pos = {int(g): j for j, g in enumerate(idx)}
-                top = heapq.nsmallest(
-                    min(k, len(idx)),
-                    list(idx),
-                    key=lambda i: (-cos[pos[int(i)]], ids[i]),
-                )
-                for i in top:
-                    out_q.append(qids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(cos[pos[int(i)]])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = coded.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
+    return _ivfadc_topk(
+        corpus, queries, codebook, k, nprobe, id_col, vec_col,
+        centroids, residual=True,
     )
 
 
@@ -2080,7 +1688,6 @@ def ivfadc_topk_refined(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    join_path: bool = False,
 ) -> DataFrame:
     """IVFADC with re-ranking (the IVFADC+R production shape, Jegou
     et al. §V-A): the residual-ADC scan proposes k*expand candidates
@@ -2091,285 +1698,17 @@ def ivfadc_topk_refined(
     refinement cost is independent of corpus size while recall climbs
     to the cell-probe ceiling (measured at sf0.1 on the clustered
     bench corpus: 0.60 ADC-only -> 0.97 refined at expand=4, ceiling
-    1.0 — the bench `ann` section records it).
-
-    `join_path=True` proposes via `ivfadc_topk_join` (queries stay a
-    DataFrame — the corpus-scale-query variant); the default uses the
-    bounded collect path. The refinement stage is distributed either
-    way: on the collect path the query side is broadcast (bounded by
-    the same contract that allowed the collect), on the join path it
-    is NOT hinted — a corpus-scale query set would blow the broadcast
-    limit, so the equi-join is left to AQE (judged review, round 8).
+    1.0 — the bench `ann` section records it). Both stages keep the
+    queries a DataFrame.
 
     Output: query_id, neighbor_id, cosine (exact, round 6), rank.
     """
-    propose = ivfadc_topk_join if join_path else ivfpq_residual_topk
-    cand = propose(
+    cand = ivfpq_residual_topk(
         corpus, queries, codebook, k=k * expand, n_cells=n_cells,
         nprobe=nprobe, id_col=id_col, vec_col=vec_col,
         centroids=centroids,
     ).select("query_id", "neighbor_id")
-    return _exact_rescore(
-        cand, corpus, queries, k, id_col, vec_col,
-        broadcast_queries=not join_path,
-    )
-
-
-def pq_topk_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebook: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 32,
-) -> DataFrame:
-    """`pq_topk` for CORPUS-SCALE query sets (VERDICT r07 item 5):
-    queries stay a DataFrame end to end. A flat ADC scan has no
-    coarse quantizer to join on — every query must score every code —
-    so the distributed shape is BLOCK REPLICATION: the coded corpus
-    is salted into `n_blocks` hash blocks, each query row is
-    replicated once per block (an `explode(sequence(...))`, shuffle
-    volume n_queries x n_blocks — bounded and tiny next to the
-    corpus), and one `_blk` equi-join lands each query against each
-    block's codes exactly once. ADC scoring then runs in the same
-    Arrow pass as `ivfpq_topk_join`: per record batch, one (m, ksub)
-    LUT per DISTINCT query, gather-sum over the m-byte codes, batch-
-    local top-k, global window merge. Candidate volume is inherently
-    n_queries x n_corpus (that is what a flat PQ scan IS); blocking
-    only distributes it — each join task scores n_corpus/n_blocks
-    codes, AQE-splittable.
-
-    Scores are the same float64 gather-sums as `pq_topk`, so outputs
-    are row-identical under the same codebook (pinned by
-    `ann_pq_join_parity_check` and the no-materialization plan pin).
-
-    Output: query_id, neighbor_id, adc_cosine (round 6), rank.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    pmat = np.array(codebook, dtype=np.float64)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)
-
-    codes = pq_encode(corpus, codebook, id_col, vec_col).withColumn(
-        "_blk",
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int"),
-    )
-    probes = (
-        with_double_vec(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), F.col("_vec").alias("_qvec"))
-        .withColumn(
-            "_blk",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(n_blocks - 1))
-            ),
-        )
-        .withColumn("_blk", F.col("_blk").cast("int"))
-    )
-    joined = probes.join(codes, "_blk").where(
-        F.col("query_id") != F.col(id_col)
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
-            ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def batches(it):
-        import heapq
-
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            rnorm = np.sqrt(p_sq[ar[None, :], cd].sum(axis=1))
-            nids = pdf[id_col].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qid, idx in pdf.groupby(
-                "query_id", sort=False
-            ).indices.items():
-                qvec = np.array(pdf["_qvec"].iloc[idx[0]], dtype=np.float64)
-                qn = np.sqrt((qvec * qvec).sum())
-                lut = np.einsum(
-                    "qmd,mkd->qmk", qvec.reshape(1, m, dsub), pmat
-                )[0]
-                num = lut[ar[None, :], cd[idx]].sum(axis=1)
-                denom = qn * rnorm[idx]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                top = heapq.nsmallest(
-                    min(k, len(idx)),
-                    range(len(idx)),
-                    key=lambda i: (-cos[i], nids[idx[i]]),
-                )
-                for i in top:
-                    out_q.append(qid)
-                    out_n.append(nids[idx[i]])
-                    out_s.append(cos[i])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = joined.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
-    )
-
-
-def ivfadc_topk_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebook: list[list[list[float]]],
-    k: int = 10,
-    n_cells: int = 32,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """`ivfpq_residual_topk` (IVFADC) for CORPUS-SCALE query sets
-    (VERDICT r07 item 5) — the residual-encoding sibling of
-    `ivfpq_topk_join`: queries stay a DataFrame, probe cells are
-    assigned in an Arrow pass (`assign_probe_cells_arrow`, same raw-
-    dot scores and stable tie order as the collect path), and ONE
-    `cell` equi-join lands each query's probe rows next to the
-    residual codes in its probed cells. Scoring inside the Arrow pass
-    reconstructs q·x̂ and |x̂|² from the same per-cell tables the
-    collect path uses — q·centroid[cell] + Σ LUT_q[code] over
-    |centroid|² + 2·Σ cross_cell[code] + Σ|c_code|² — with cross/
-    cent_sq/p_sq entering as broadcast model artifacts and LUT_q
-    built per DISTINCT query per batch. Corpus codes come from the
-    shared `residual_encode`, so both paths score bit-identical
-    candidates (pinned by `ann_ivfadc_join_parity_check` and the
-    no-materialization plan pin).
-
-    Output: query_id, neighbor_id, adc_cosine (round 6), rank.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    if centroids is None:
-        centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-    cmat = np.array(centroids, dtype=np.float64)
-    pmat = np.array(codebook, dtype=np.float64)
-    m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=2)
-    cent_sq = (cmat * cmat).sum(axis=1)
-    cross = np.einsum(
-        "cmd,mkd->cmk", cmat.reshape(cmat.shape[0], m, dsub), pmat
-    )
-
-    coded = residual_encode(corpus, centroids, codebook, id_col, vec_col)
-    probes = assign_probe_cells_arrow(
-        queries, centroids, nprobe, id_col, vec_col
-    )
-    joined = probes.join(coded, "cell").where(
-        F.col("query_id") != F.col(id_col)
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
-            ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def batches(it):
-        import heapq
-
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells_b = pdf["cell"].to_numpy()
-            nids = pdf[id_col].to_numpy()
-            res_sq = p_sq[ar[None, :], cd].sum(axis=1)
-            cross_term = cross[cells_b[:, None], ar[None, :], cd].sum(axis=1)
-            recon_sq = cent_sq[cells_b] + 2.0 * cross_term + res_sq
-            rnorm = np.sqrt(np.maximum(recon_sq, 0.0))
-            out_q, out_n, out_s = [], [], []
-            for qid, idx in pdf.groupby(
-                "query_id", sort=False
-            ).indices.items():
-                qvec = np.array(pdf["_qvec"].iloc[idx[0]], dtype=np.float64)
-                qn = np.sqrt((qvec * qvec).sum())
-                # same (1, n_cells) matmul shape as the collect path's
-                # q_dot_cent row, so the floats agree
-                qdc = (qvec.reshape(1, -1) @ cmat.T)[0]
-                lut = np.einsum(
-                    "qmd,mkd->qmk", qvec.reshape(1, m, dsub), pmat
-                )[0]
-                num = qdc[cells_b[idx]] + lut[ar[None, :], cd[idx]].sum(
-                    axis=1
-                )
-                denom = qn * rnorm[idx]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                top = heapq.nsmallest(
-                    min(k, len(idx)),
-                    range(len(idx)),
-                    key=lambda i: (-cos[i], nids[idx[i]]),
-                )
-                for i in top:
-                    out_q.append(qid)
-                    out_n.append(nids[idx[i]])
-                    out_s.append(cos[i])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = joined.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
-    )
+    return _exact_rescore(cand, corpus, queries, k, id_col, vec_col)
 
 
 def _cells_and_residuals(vecs, cmat):
@@ -2584,14 +1923,17 @@ def pq_codebook_residual_percell(
 def residual_encode_percell(
     corpus: DataFrame,
     centroids: list[list[float]],
-    books: list[list[list[list[float]]]],
+    books,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """`residual_encode` with per-cell codebooks: coarse cell by raw
-    dot, then PQ codes of the residual against THAT cell's book. One
-    Arrow pass; within a batch rows are encoded cell-group at a time
-    (<= n_cells einsums per batch, each over that cell's rows only).
+    """IVFADC corpus encoding in one Arrow pass: coarse cell by raw
+    dot, then PQ codes of the residual (x - centroid[cell]) against
+    the cell's book. `books` is either per-cell (n_cells, m, ksub,
+    dsub) books — rows are then encoded cell-group at a time (<=
+    n_cells einsums per batch, each over that cell's rows only) — or
+    one shared (m, ksub, dsub) codebook, which every row indexes in a
+    single einsum per batch (held once, never tiled per cell).
 
     Output: id_col, cell (int), codes (array<int>, length m).
     """
@@ -2601,8 +1943,9 @@ def residual_encode_percell(
     from pyspark.sql import types as T
 
     cmat = np.array(centroids, dtype=np.float64)
-    pmat = np.array(books, dtype=np.float64)  # (n_cells, m, ksub, dsub)
-    n_cells, m, ksub, dsub = pmat.shape
+    pmat = np.array(books, dtype=np.float64)
+    shared = pmat.ndim == 3
+    m, ksub, dsub = pmat.shape[-3:]
     src = with_double_vec(corpus, vec_col).select(F.col(id_col), "_vec")
     schema = T.StructType(
         [
@@ -2619,11 +1962,14 @@ def residual_encode_percell(
                 continue
             vecs = np.array(list(pdf["_vec"]), dtype=np.float64)
             cells, res = _cells_and_residuals(vecs, cmat)
-            codes = np.empty((n, m), dtype=np.int32)
-            for c in np.unique(cells):
-                idx = np.nonzero(cells == c)[0]
-                sub = res[idx].reshape(len(idx), m, dsub)
-                codes[idx] = _percell_code_kernel(sub, pmat[c])
+            if shared:
+                codes = _percell_code_kernel(res.reshape(n, m, dsub), pmat)
+            else:
+                codes = np.empty((n, m), dtype=np.int32)
+                for c in np.unique(cells):
+                    idx = np.nonzero(cells == c)[0]
+                    sub = res[idx].reshape(len(idx), m, dsub)
+                    codes[idx] = _percell_code_kernel(sub, pmat[c])
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -2764,206 +2110,30 @@ def ivfadc_percell_topk(
     n_cells: int = 32,
 ) -> DataFrame:
     """IVFADC search against PER-CELL residual codebooks — the same
-    inverted-list ADC scan as `ivfpq_residual_topk` (cell pruning, m
-    bytes per scanned row, per-query LUTs), except every table is
+    inverted-list ADC pipeline as `ivfpq_residual_topk` (cell pruning,
+    m bytes per scanned row, per-query LUTs), except every table is
     indexed by cell: LUT_q[c] = q-subspace · books[c], cross[c] =
-    centroid_c-subspace · books[c]. Per-query LUTs are built ONLY for
-    the query's probed cells (nq * nprobe * m * ksub floats total —
-    NOT the full (nq, n_cells, m, ksub) tensor, which is
-    n_cells/nprobe larger and would blow the driver at the ~1k-cell
-    regime `pq_codebook_residual_percell` documents). Recall lift
-    measured in the bench `ann` curve.
+    centroid_c-subspace · books[c]. `_adc_score` builds LUTs ONLY for
+    the (query, probed cell) pairs a batch holds — at most nprobe per
+    query, each m*ksub floats — never the full (nq, n_cells, m, ksub)
+    tensor. Corpus codes come from `residual_encode_percell`. Recall
+    lift measured in the bench `ann` curve.
 
-    Output: query_id, neighbor_id, adc_cosine, rank — identical
-    contract to `ivfpq_residual_topk`.
-    """
-    import heapq
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    if centroids is None:
-        centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-    cmat = np.array(centroids, dtype=np.float64)
-    n_cells = cmat.shape[0]
-    pmat = np.array(books, dtype=np.float64)  # (n_cells, m, ksub, dsub)
-    _, m, ksub, dsub = pmat.shape
-    p_sq = (pmat * pmat).sum(axis=3)  # (n_cells, m, ksub)
-    cent_sq = (cmat * cmat).sum(axis=1)
-    cent_sub = cmat.reshape(n_cells, m, dsub)
-    cross = np.einsum("cmd,cmkd->cmk", cent_sub, pmat)  # (n_cells, m, ksub)
-
-    coded = residual_encode_percell(
-        corpus, centroids, books, id_col, vec_col
-    )
-
-    qrows = (
-        with_double_vec(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), "_vec")
-        .collect()
-    )
-    qids = [r["query_id"] for r in qrows]
-    qmat = np.array([r["_vec"] for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    q_dot_cent = qmat @ cmat.T
-    order = np.argsort(-q_dot_cent, axis=1, kind="stable")
-    probes = [
-        set(int(c) for c in order[i, :nprobe]) for i in range(len(qids))
-    ]
-    # (nq, n_cells) boolean probe matrix: the batch hot loop masks
-    # with one vectorized gather instead of a per-(query, row) Python
-    # membership test (judged advice, round 9)
-    probe_mat = np.zeros((len(qids), n_cells), dtype=bool)
-    for i, ps in enumerate(probes):
-        probe_mat[i, list(ps)] = True
-    # LUTs ONLY for each query's probed cells (nq * nprobe * m * ksub
-    # floats — the docstring's budget; the full (nq, n_cells, ...)
-    # tensor is n_cells/nprobe larger and blows the driver at the
-    # ~1k-cell regime). The per-cell einsum contracts identically to
-    # the full "qmd,cmkd->qcmk" slice, so floats agree bit-for-bit
-    # with the join twin's per-cell LUTs.
-    luts = [
-        {
-            c: np.einsum(
-                "qmd,cmkd->qcmk",
-                qmat[i].reshape(1, m, dsub),
-                pmat[c : c + 1],
-            )[0, 0]
-            for c in probes[i]
-        }
-        for i in range(len(qids))
-    ]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField(
-                "neighbor_id", corpus.schema[id_col].dataType, True
-            ),
-            T.StructField("adc_cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def score(it):
-        ar = np.arange(m)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells_b = pdf["cell"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            res_sq = p_sq[cells_b[:, None], ar[None, :], cd].sum(axis=1)
-            cross_term = cross[cells_b[:, None], ar[None, :], cd].sum(
-                axis=1
-            )
-            recon_sq = cent_sq[cells_b] + 2.0 * cross_term + res_sq
-            rnorm = np.sqrt(np.maximum(recon_sq, 0.0))
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                mask = probe_mat[qi][cells_b] & (ids != qids[qi])
-                if not mask.any():
-                    continue
-                idx = np.nonzero(mask)[0]
-                qcells = cells_b[idx]
-                lut_terms = np.empty(len(idx), dtype=np.float64)
-                for c in np.unique(qcells):
-                    sel = np.nonzero(qcells == c)[0]
-                    lut_terms[sel] = luts[qi][int(c)][
-                        ar[None, :], cd[idx][sel]
-                    ].sum(axis=1)
-                num = q_dot_cent[qi][qcells] + lut_terms
-                denom = qnorm[qi] * rnorm[idx]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, num / denom, 0.0)
-                pos = {int(g): j for j, g in enumerate(idx)}
-                top = heapq.nsmallest(
-                    min(k, len(idx)),
-                    list(idx),
-                    key=lambda i: (-cos[pos[int(i)]], ids[i]),
-                )
-                for i in top:
-                    out_q.append(qids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(cos[pos[int(i)]])
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "adc_cosine": out_s,
-                }
-            )
-
-    scored = coded.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_cosine", 6).alias("adc_cosine"),
-            "rank",
-        )
-    )
-
-
-def ivfadc_percell_topk_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[list[float]]]],
-    k: int = 10,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    n_cells: int = 32,
-) -> DataFrame:
-    """`ivfadc_percell_topk` for CORPUS-SCALE query sets — the join
-    twin every search formulation carries (round-8 discipline):
-    queries stay a DataFrame, probe cells are assigned in an Arrow
-    pass, and ONE `cell` equi-join lands each query's probe rows next
-    to the per-cell residual codes. The ADC tables are the cell-
-    indexed versions (p_sq/cross per cell; LUT_q computed per
-    (distinct query, distinct probed cell) inside the batch — at most
-    nprobe LUTs per query, each m*ksub floats). Corpus codes come
-    from the shared `residual_encode_percell`, so both paths score
-    bit-identical candidates (pinned by
-    `ann_ivfadc_percell_join_parity_check`).
-
-    Output: query_id, neighbor_id, adc_cosine (round 6), rank.
+    Output: query_id, neighbor_id, adc_cosine (round 6), rank —
+    identical contract to `ivfpq_residual_topk`.
     """
     if centroids is None:
         centroids = sample_centroids(corpus, n_cells, id_col, vec_col)
-    coded = residual_encode_percell(
-        corpus, centroids, books, id_col, vec_col
-    )
-    probes = assign_probe_cells_arrow(
-        queries, centroids, nprobe, id_col, vec_col
-    )
-    joined = probes.join(coded, "cell").where(
-        F.col("query_id") != F.col(id_col)
-    )
-    return _adc_score_joined_percell(
-        joined,
-        centroids,
-        books,
-        k,
-        qid_type=queries.schema[id_col].dataType,
-        nid_type=corpus.schema[id_col].dataType,
-        nid_name=id_col,
+    return _ivfadc_topk(
+        corpus, queries, books, k, nprobe, id_col, vec_col,
+        centroids, residual=True,
     )
 
 
-def _adc_score_joined_percell(
+def _adc_score(
     joined: DataFrame,
-    centroids: list[list[float]],
-    books: list[list[list[list[float]]]] | None,
+    centroids,
+    books,
     k: int,
     qid_type,
     nid_type,
@@ -2972,19 +2142,33 @@ def _adc_score_joined_percell(
     lake_shape: tuple[int, int] | None = None,
     fitted_cells: frozenset[int] | None = None,
 ) -> DataFrame:
-    """Shared ADC scoring tail of the PER-CELL residual join searches
-    (the cell-indexed sibling of `_adc_score_joined`): one Arrow pass
-    over (query_id, _qvec, codes, cell, <nid_name>) joined rows —
-    reconstruction tables (p_sq/cross/cent_sq) indexed by cell, one
-    LUT per (distinct query, distinct probed cell) per record batch —
-    then the global per-query window merge. Same float64 gather-sums
-    as `ivfadc_percell_topk` (parity gates); used by the in-memory
-    join twin and the lake probe, so both score identically.
+    """THE ADC scoring kernel of every PQ search — `pq_topk`,
+    `ivfpq_topk`, `ivfpq_residual_topk`, `ivfadc_percell_topk` and
+    `IvfpqLakeIndex.probe`: one Arrow pass over (query_id, _qvec,
+    codes, cell, <nid_name>) joined rows, then the global per-query
+    window merge. Per record batch:
+
+    - reconstruction norms |x̂|² = |centroid|² + 2·Σ cross_cell[code]
+      + Σ |c_code|², from per-cell (p_sq, cross) tables built once per
+      task for each cell it scores;
+    - one (m, ksub) LUT per distinct query and distinct BOOK (one per
+      query for a shared codebook, one per (query, probed cell) for
+      per-cell books), a gather-sum over the m-byte codes plus
+      q·centroid[cell], and a batch-local top-k per query — so the
+      window sees (batches x queries_in_batch x k) rows, never the
+      joined candidate volume.
+
+    `centroids` are the RECONSTRUCTION centroids, indexed by `cell`:
+    the coarse centroids for residual codes, zeros for raw codes (a
+    zero centroid makes every centroid term 0.0, so the score reduces
+    to the plain PQ gather-sum).
 
     Books arrive one of two ways (exactly one of `books`/`books_dir`):
 
-    - `books` — the in-memory (n_cells, m, ksub, dsub) tensor,
-      broadcast via closure. The <=~1k-cells fast case.
+    - `books` — one shared (m, ksub, dsub) codebook that every cell
+      indexes (held once in the closure, never tiled per cell), or the
+      in-memory per-cell (n_cells, m, ksub, dsub) tensor, broadcast via
+      closure. The <=~1k-cells fast case.
     - `books_dir` (+ `lake_shape=(m, ksub)` from the store's meta) —
       the cell-partitioned lake layout (`books/cell=<i>/` parquet
       beside the codes, written by `IvfpqLakeIndex.build(
@@ -3025,10 +2209,9 @@ def _adc_score_joined_percell(
       The books filesystem is resolved at the
       driver through fsio's scheme registry (`dataset_filesystem`),
       so a store under a registered custom scheme probes exactly
-      like a local one. Per-cell
-      tensors are elementwise slices of the global ones (squares
-      summed over dsub; one-cell einsums), so the floats are
-      bit-identical to the broadcast path — pinned by
+      like a local one. Per-cell tables are computed by the same
+      one-cell ops whichever way the book arrived, so the floats are
+      bit-identical across layouts — pinned by
       `ann_ivfadc_percell_lakebooks_parity_check`.
     """
     import numpy as np
@@ -3043,18 +2226,16 @@ def _adc_score_joined_percell(
     n_cells, dim = cmat.shape
     cent_sq = (cmat * cmat).sum(axis=1)
     if books is not None:
-        pmat = np.array(books, dtype=np.float64)  # (n_cells,m,ksub,dsub)
-        _, m, ksub, dsub = pmat.shape
-        p_sq = (pmat * pmat).sum(axis=3)
-        cross = np.einsum(
-            "cmd,cmkd->cmk", cmat.reshape(n_cells, m, dsub), pmat
-        )
+        # (m, ksub, dsub) shared, or (n_cells, m, ksub, dsub) per cell
+        pmat = np.array(books, dtype=np.float64)
+        shared = pmat.ndim == 3
+        m, ksub, dsub = pmat.shape[-3:]
     else:
         if lake_shape is None:
             raise ValueError("books_dir= requires lake_shape=(m, ksub)")
         m, ksub = int(lake_shape[0]), int(lake_shape[1])
         dsub = dim // m
-        pmat = p_sq = cross = None
+        pmat, shared = None, False
         # driver-side resolution: the scheme registry lives in the
         # driver process, so workers receive the RESOLVED filesystem
         # (picklable pyarrow handler), never re-consult the registry
@@ -3073,12 +2254,12 @@ def _adc_score_joined_percell(
     def batches(it):
         import heapq
 
-        # per-TASK book cache for the lake layout: cell -> (pmat_c,
-        # p_sq_c, cross_c). The joined rows arrive cell-clustered
-        # (the join shuffled on `cell`), so a task revisits few cells.
-        book_cache: dict[int, tuple] = {}
+        # per-TASK cell tables: cell -> (book, p_sq, cross). The joined
+        # rows arrive cell-clustered (the join shuffled on `cell`), so
+        # a task revisits few cells.
+        tables: dict[int, tuple] = {}
 
-        def _load_cell(c: int) -> None:
+        def _lake_book(c: int):
             # DIRECT read of this one cell's directory — a hive
             # discovery over books_dir would list every cell=* dir
             # (O(n_cells) metadata calls per task, repeatedly) in
@@ -3092,13 +2273,7 @@ def _adc_score_joined_percell(
                 # NOT decode them — skip the read entirely (judged
                 # ADVICE r12 high; see the docstring's two-direction
                 # rule)
-                pmat_c = np.zeros((m, ksub, dsub), dtype=np.float64)
-                p_sq_c = (pmat_c * pmat_c).sum(axis=2)
-                cross_c = np.einsum(
-                    "md,mkd->mk", cmat[c].reshape(m, dsub), pmat_c
-                )
-                book_cache[c] = (pmat_c, p_sq_c, cross_c)
-                return
+                return np.zeros((m, ksub, dsub), dtype=np.float64)
             try:
                 ds = pads.dataset(
                     f"{books_root}/cell={c}",
@@ -3144,20 +2319,21 @@ def _adc_score_joined_percell(
                 # the zero book, exactly the in-memory tensor's
                 # zero-padding verdict (the store-level existence of
                 # books/ is guarded at the driver before the scan)
-                pmat_c = np.zeros((m, ksub, dsub), dtype=np.float64)
-            else:
-                pmat_c = np.array(
-                    tbl.to_pylist()[0]["book"], dtype=np.float64
+                return np.zeros((m, ksub, dsub), dtype=np.float64)
+            return np.array(tbl.to_pylist()[0]["book"], dtype=np.float64)
+
+        def _tables(c: int) -> tuple:
+            if c not in tables:
+                if pmat is None:
+                    book = _lake_book(c)
+                else:
+                    book = pmat if shared else pmat[c]
+                tables[c] = (
+                    book,
+                    (book * book).sum(axis=2),
+                    np.einsum("md,mkd->mk", cmat[c].reshape(m, dsub), book),
                 )
-            # identical elementwise ops to the global precompute:
-            # squares summed over dsub; the one-cell einsum is the
-            # global "cmd,cmkd->cmk" restricted to c (verified
-            # bit-identical; parity-gated)
-            p_sq_c = (pmat_c * pmat_c).sum(axis=2)
-            cross_c = np.einsum(
-                "md,mkd->mk", cmat[c].reshape(m, dsub), pmat_c
-            )
-            book_cache[c] = (pmat_c, p_sq_c, cross_c)
+            return tables[c]
 
         ar = np.arange(m)
         for pdf in it:
@@ -3167,34 +2343,12 @@ def _adc_score_joined_percell(
             cd = np.array(list(pdf["codes"]), dtype=np.int64)
             cells_b = pdf["cell"].to_numpy()
             nids = pdf[nid_name].to_numpy()
-            if books is not None:
-                res_sq = p_sq[cells_b[:, None], ar[None, :], cd].sum(
-                    axis=1
-                )
-                cross_term = cross[
-                    cells_b[:, None], ar[None, :], cd
-                ].sum(axis=1)
-            else:
-                ucells_b = np.unique(cells_b)
-                for c in ucells_b:
-                    if int(c) not in book_cache:
-                        _load_cell(int(c))
-                loc = np.searchsorted(ucells_b, cells_b)
-                p_sq_b = np.stack(
-                    [book_cache[int(c)][1] for c in ucells_b]
-                )
-                cross_b = np.stack(
-                    [book_cache[int(c)][2] for c in ucells_b]
-                )
-                # gathers indexed through the batch-local remap select
-                # exactly the scalars the global tensors would — the
-                # row-wise sums are bit-identical to the broadcast path
-                res_sq = p_sq_b[loc[:, None], ar[None, :], cd].sum(
-                    axis=1
-                )
-                cross_term = cross_b[
-                    loc[:, None], ar[None, :], cd
-                ].sum(axis=1)
+            ucells_b = np.unique(cells_b)
+            loc = np.searchsorted(ucells_b, cells_b)
+            p_sq_b = np.stack([_tables(int(c))[1] for c in ucells_b])
+            cross_b = np.stack([_tables(int(c))[2] for c in ucells_b])
+            res_sq = p_sq_b[loc[:, None], ar[None, :], cd].sum(axis=1)
+            cross_term = cross_b[loc[:, None], ar[None, :], cd].sum(axis=1)
             recon_sq = cent_sq[cells_b] + 2.0 * cross_term + res_sq
             rnorm = np.sqrt(np.maximum(recon_sq, 0.0))
             out_q, out_n, out_s = [], [], []
@@ -3203,31 +2357,19 @@ def _adc_score_joined_percell(
             ).indices.items():
                 qvec = np.array(pdf["_qvec"].iloc[idx[0]], dtype=np.float64)
                 qn = np.sqrt((qvec * qvec).sum())
-                # same (1, n_cells) matmul shape as the collect path's
-                # q_dot_cent row, so the floats agree
+                qsub = qvec.reshape(m, dsub)
                 qdc = (qvec.reshape(1, -1) @ cmat.T)[0]
                 qcells = cells_b[idx]
-                # one LUT per probed cell present in this batch —
-                # np.einsum over the cell-subset tensor keeps the
-                # contraction order identical to the collect path's
-                # full "qmd,cmkd->qcmk" (floats agree bit-for-bit)
-                ucells = np.unique(qcells)
+                # one LUT per distinct book among this query's rows
+                book_keys = np.zeros_like(qcells) if shared else qcells
                 lut_terms = np.empty(len(idx), dtype=np.float64)
-                for c in ucells:
-                    book_c = (
-                        pmat[c : c + 1]
-                        if books is not None
-                        else book_cache[int(c)][0][None]
+                for key in np.unique(book_keys):
+                    sel = np.nonzero(book_keys == key)[0]
+                    book = _tables(int(qcells[sel[0]]))[0]
+                    lut = np.einsum("md,mkd->mk", qsub, book)
+                    lut_terms[sel] = lut[ar[None, :], cd[idx[sel]]].sum(
+                        axis=1
                     )
-                    lut_c = np.einsum(
-                        "qmd,cmkd->qcmk",
-                        qvec.reshape(1, m, dsub),
-                        book_c,
-                    )[0, 0]
-                    sel = np.nonzero(qcells == c)[0]
-                    lut_terms[sel] = lut_c[
-                        ar[None, :], cd[idx][sel]
-                    ].sum(axis=1)
                 num = qdc[qcells] + lut_terms
                 denom = qn * rnorm[idx]
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -3667,7 +2809,7 @@ def ivfpq_write_index(
 
     Cell assignment and encoding reuse the exact Arrow passes of the
     in-memory path (`assign_cells_arrow` raw-dot + `pq_encode`), so a
-    lake probe scores bit-identical candidates to `ivfpq_topk_join`
+    lake probe scores bit-identical candidates to `ivfpq_topk`
     over the same corpus (pinned by `ann_ivfpq_lake_parity_check`).
 
     One-shot form of `IvfpqLakeIndex` (a single-epoch instance —
@@ -3704,9 +2846,9 @@ def ivfpq_probe_lake(
 
     Model artifacts come from the index's own `index_meta.json`, so
     the probe scores with exactly the centroids/codebook the index
-    was encoded under. Results are row-identical to
-    `ivfpq_topk_join` (and therefore `ivfpq_topk`) over the same
-    corpus and model (pinned by `ann_ivfpq_lake_parity_check`).
+    was encoded under. Results are row-identical to `ivfpq_topk`
+    over the same corpus and model (pinned by
+    `ann_ivfpq_lake_parity_check`).
 
     Output: query_id, neighbor_id, adc_cosine (round 6), rank.
 
@@ -3729,7 +2871,6 @@ def ivfadc_percell_topk_refined(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     n_cells: int = 32,
-    join_path: bool = False,
 ) -> DataFrame:
     """IVFADC+R over PER-CELL books — the two-stage production shape
     (`ivfadc_topk_refined`'s discipline) composed over the round-9
@@ -3738,28 +2879,17 @@ def ivfadc_percell_topk_refined(
     read back and exactly re-scored. Float reads stay bounded at
     n_queries*k*expand rows; recall climbs from the ADC number (0.74
     unrefined on the clustered bench corpus) to the cell-probe
-    ceiling (the bench `ann` curve records the refined row).
-
-    `join_path=True` proposes via `ivfadc_percell_topk_join` and
-    leaves the query-side refinement join unhinted (corpus-scale
-    query sets must not broadcast); the default collect path
-    broadcasts the bounded query side — the same split as
-    `ivfadc_topk_refined`.
+    ceiling (the bench `ann` curve records the refined row). Both
+    stages keep the queries a DataFrame.
 
     Output: query_id, neighbor_id, cosine (exact, round 6), rank.
     """
-    propose = (
-        ivfadc_percell_topk_join if join_path else ivfadc_percell_topk
-    )
-    cand = propose(
+    cand = ivfadc_percell_topk(
         corpus, queries, books, k=k * expand, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col, centroids=centroids,
         n_cells=n_cells,
     ).select("query_id", "neighbor_id")
-    return _exact_rescore(
-        cand, corpus, queries, k, id_col, vec_col,
-        broadcast_queries=not join_path,
-    )
+    return _exact_rescore(cand, corpus, queries, k, id_col, vec_col)
 
 
 def ivfadc_percell_write_index(
@@ -3779,7 +2909,7 @@ def ivfadc_percell_write_index(
     ("ivfadc_percell") is the only difference, dispatched inside ONE
     `IvfpqLakeIndex` implementation. Codes come from
     `residual_encode_percell`, so a lake probe scores bit-identical
-    candidates to `ivfadc_percell_topk_join` over the same corpus
+    candidates to `ivfadc_percell_topk` over the same corpus
     (pinned by `ann_ivfadc_percell_lake_parity_check`).
 
     Pass `books_df` (from `pq_codebook_residual_percell_df`) plus its
@@ -3799,7 +2929,7 @@ def load_percell_books(
     """Hydrate a PARTITIONED-books store's per-cell books into the
     in-memory (n_cells, m, ksub, dsub) nested-list tensor — the
     read-back inverse of `IvfpqLakeIndex.build(books_df=...)`, for
-    callers that want the collect-path twins (`ivfadc_percell_topk*`)
+    callers that want the in-memory searches (`ivfadc_percell_topk*`)
     over a model that lives in a lake store. Shape comes from the
     store's own frozen `index_meta.json` — never from hand-carried
     literals that can drift from the store config (judged review,
@@ -3808,7 +2938,7 @@ def load_percell_books(
     Never-fitted cells hydrate to fresh zero books, matching the
     in-memory fit's padding verdict — adjudicated by the FITTED
     MANIFEST, not directory existence (round 13, the
-    `_adc_score_joined_percell` rule applied here too): a
+    `_adc_score` rule applied here too): a
     manifest-absent cell's book dir is a mid-refresh new book or
     crash debris whose codes are still zero-book encoded, and
     hydrating it would score them wrongly."""
@@ -4621,13 +3751,15 @@ class IvfpqLakeIndex:
         """Probe every epoch at once: the probe-cell UNION is a static
         `cell IN (...)` predicate on the partition column (file-listing
         pruning across all epoch directories), scoring is the shared
-        join-path ADC Arrow pass. Same bounded driver collect as
+        ADC kernel (`_adc_score`). Same bounded driver collect as
         `ivf_probe_lake` (|queries| * nprobe cell ids, never rows).
 
         neighbor_id carries the STORED index's id type (from the lake
         schema; from the frozen meta when the store has no epochs
         yet), so a probe's schema never flips with the query batch's
         id type and empty/non-empty probes union cleanly."""
+        import numpy as np
+
         from ..catalog import fsio
 
         meta = self._meta()
@@ -4669,96 +3801,88 @@ class IvfpqLakeIndex:
         joined = probes.join(
             lake.select("neighbor_id", "codes", "cell"), "cell"
         ).where(F.col("query_id") != F.col("neighbor_id"))
-        if meta.get("encoding", "pq") == "ivfadc_percell":
-            partitioned = meta.get("books_storage") == "partitioned"
-            if partitioned:
-                # corruption vs drift: the build's fitted-cell
-                # manifest says which cells MUST have a book dir — a
-                # probed fitted cell whose dir is gone means the tree
-                # was damaged (raise), while a probed never-fitted
-                # cell is the legitimate drift case the scan scores
-                # against the zero book. O(probed cells) driver stat
-                # calls, the same bound as the probe-cell collect.
-                man_path = fsio.join(
-                    self.store_dir, "books_manifest.json"
-                )
-                if not fsio.exists(self.books_dir) or not fsio.exists(
-                    man_path
-                ):
-                    raise ValueError(
-                        f"{self.store_dir} is a partitioned-books "
-                        "store but its books/ directory or "
-                        "books_manifest.json is missing — rebuild "
-                        "the index"
-                    )
-                fitted = set(fsio.read_json(man_path)["cells"])
-                # while a maintenance window is open, the snapshot's
-                # codes are the PRE-REWRITE ones, so their fitted set
-                # must be the pre-rewrite manifest recorded in the
-                # backup (round 13, judged ADVICE r12 high):
-                # refresh_books writes the drifted cells' new books
-                # and extends the manifest before the window closes,
-                # and decoding snapshot-served zero-book codes under
-                # either would silently corrupt scores. The kernel's
-                # manifest-authoritative rule (see
-                # _adc_score_joined_percell) then guarantees those
-                # cells ignore the new book dirs entirely. The meta
-                # is read from the SAME resolved source the codes
-                # plan was built from — re-resolving here could
-                # straddle the window's close and pair snapshot codes
-                # with the post-rewrite manifest.
-                from ..catalog import backup as backuplib
-
-                snap_meta = (
-                    backuplib.read_meta_at(snap_src)
-                    if snap_src is not None
-                    else None
-                )
-                if snap_meta is not None and "fitted_cells" in snap_meta:
-                    fitted = set(snap_meta["fitted_cells"])
-                broken = [
-                    c
-                    for c in probe_cells
-                    if c in fitted
-                    and not fsio.exists(
-                        fsio.join(self.books_dir, f"cell={c}")
-                    )
-                ]
-                if broken:
-                    raise ValueError(
-                        f"fitted cells {broken} have no book "
-                        f"directory under {self.books_dir} — the "
-                        "books tree is damaged (the manifest says "
-                        "they were written); rebuild the index"
-                    )
-            return _adc_score_joined_percell(
-                joined,
-                centroids,
-                # partitioned books never pass through the driver: the
-                # scoring tasks read only the probed cells' book files
-                # (book bytes scale with nprobe, not n_cells)
-                None if partitioned else meta["books"],
-                k,
-                qid_type=queries.schema[id_col].dataType,
-                nid_type=lake.schema["neighbor_id"].dataType,
-                nid_name="neighbor_id",
-                books_dir=self.books_dir if partitioned else None,
-                lake_shape=(
-                    (int(meta["m"]), int(meta["ksub"]))
-                    if partitioned
-                    else None
-                ),
-                fitted_cells=(
-                    frozenset(fitted) if partitioned else None
-                ),
+        percell = meta.get("encoding", "pq") == "ivfadc_percell"
+        partitioned = percell and meta.get("books_storage") == "partitioned"
+        if partitioned:
+            # corruption vs drift: the build's fitted-cell
+            # manifest says which cells MUST have a book dir — a
+            # probed fitted cell whose dir is gone means the tree
+            # was damaged (raise), while a probed never-fitted
+            # cell is the legitimate drift case the scan scores
+            # against the zero book. O(probed cells) driver stat
+            # calls, the same bound as the probe-cell collect.
+            man_path = fsio.join(
+                self.store_dir, "books_manifest.json"
             )
-        return _adc_score_joined(
+            if not fsio.exists(self.books_dir) or not fsio.exists(
+                man_path
+            ):
+                raise ValueError(
+                    f"{self.store_dir} is a partitioned-books "
+                    "store but its books/ directory or "
+                    "books_manifest.json is missing — rebuild "
+                    "the index"
+                )
+            fitted = set(fsio.read_json(man_path)["cells"])
+            # while a maintenance window is open, the snapshot's
+            # codes are the PRE-REWRITE ones, so their fitted set
+            # must be the pre-rewrite manifest recorded in the
+            # backup (round 13, judged ADVICE r12 high):
+            # refresh_books writes the drifted cells' new books
+            # and extends the manifest before the window closes,
+            # and decoding snapshot-served zero-book codes under
+            # either would silently corrupt scores. The kernel's
+            # manifest-authoritative rule (see
+            # _adc_score) then guarantees those
+            # cells ignore the new book dirs entirely. The meta
+            # is read from the SAME resolved source the codes
+            # plan was built from — re-resolving here could
+            # straddle the window's close and pair snapshot codes
+            # with the post-rewrite manifest.
+            from ..catalog import backup as backuplib
+
+            snap_meta = (
+                backuplib.read_meta_at(snap_src)
+                if snap_src is not None
+                else None
+            )
+            if snap_meta is not None and "fitted_cells" in snap_meta:
+                fitted = set(snap_meta["fitted_cells"])
+            broken = [
+                c
+                for c in probe_cells
+                if c in fitted
+                and not fsio.exists(
+                    fsio.join(self.books_dir, f"cell={c}")
+                )
+            ]
+            if broken:
+                raise ValueError(
+                    f"fitted cells {broken} have no book "
+                    f"directory under {self.books_dir} — the "
+                    "books tree is damaged (the manifest says "
+                    "they were written); rebuild the index"
+                )
+        return _adc_score(
             joined,
-            meta["codebook"],
+            # per-cell codes are residuals; "pq" codes are raw, scored
+            # against zero reconstruction centroids
+            centroids if percell else np.zeros_like(centroids),
+            # partitioned books never pass through the driver: the
+            # scoring tasks read only the probed cells' book files
+            # (book bytes scale with nprobe, not n_cells)
+            (None if partitioned else meta["books"])
+            if percell
+            else meta["codebook"],
             k,
             qid_type=queries.schema[id_col].dataType,
             nid_type=lake.schema["neighbor_id"].dataType,
             nid_name="neighbor_id",
+            books_dir=self.books_dir if partitioned else None,
+            lake_shape=(
+                (int(meta["m"]), int(meta["ksub"])) if partitioned else None
+            ),
+            fitted_cells=frozenset(fitted) if partitioned else None,
         )
 
     def probe_refined(
@@ -4770,7 +3894,6 @@ class IvfpqLakeIndex:
         nprobe: int = 8,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        broadcast_queries: bool = False,
     ) -> DataFrame:
         """Two-stage lake probe — the production shape
         (`ivfadc_topk_refined`'s discipline) over the STORED index:
@@ -4781,11 +3904,8 @@ class IvfpqLakeIndex:
         codes, not floats, so refinement reads the source lake table)
         and exactly re-scored via the ONE `_exact_rescore` tail every
         +R search shares. Float reads stay bounded at
-        n_queries*k*expand rows regardless of index size.
-
-        `broadcast_queries=False` (default) keeps corpus-scale query
-        sets distributed — the join twins' contract; pass True for a
-        bounded query batch to skip the shuffle on the query side.
+        n_queries*k*expand rows regardless of index size; the query
+        side stays distributed.
 
         Output: query_id, neighbor_id, cosine (exact, round 6), rank.
         """
@@ -4793,10 +3913,7 @@ class IvfpqLakeIndex:
             queries, k=k * expand, nprobe=nprobe,
             id_col=id_col, vec_col=vec_col,
         ).select("query_id", "neighbor_id")
-        return _exact_rescore(
-            cand, corpus, queries, k, id_col, vec_col,
-            broadcast_queries=broadcast_queries,
-        )
+        return _exact_rescore(cand, corpus, queries, k, id_col, vec_col)
 
     # -- maintenance ------------------------------------------------------
     @locked_mutation

@@ -1354,105 +1354,106 @@ def q_ann_ivfpq_recall_check(spark, sf_dir):
     )
 
 
+def _split_batch_parity(emb, search):
+    """`search` over the 10 queries vec_id < 10 must equal the union
+    of the same search over vec_id < 5 and 5 <= vec_id < 10. The ADC
+    kernel builds its LUTs and top-k per distinct query inside each
+    record batch, so a batch that groups several queries must never
+    mix their tables or their candidates; splitting the query set
+    changes which queries share a batch, never an answer."""
+    vid = F.col("vec_id")
+    whole = search(emb.where(vid < 10))
+    halves = search(emb.where(vid < 5)).unionByName(
+        search(emb.where((vid >= 5) & (vid < 10)))
+    )
+    return _join_parity(whole, halves)
+
+
 def q_ann_ivfpq_join_parity_check(spark, sf_dir):
-    """The corpus-scale-queries IVFPQ path (`ivfpq_topk_join` —
-    queries stay a DataFrame, probes land via one `cell` equi-join,
-    ADC LUTs are built per distinct query inside the Arrow scoring
-    pass) must be ROW-IDENTICAL to the bounded collect path under the
-    same codebook/centroids: same float64 gather-sums, same tie
-    orders, different distribution strategy. Checked both directions
-    with anti-joins over all four output columns."""
+    """IVFPQ (`ivfpq_topk` — queries stay a DataFrame, probes land via
+    one `cell` equi-join, ADC LUTs are built per distinct query inside
+    the Arrow scoring pass): the 10-query batch must be ROW-IDENTICAL
+    to its two 5-query halves under the same codebook/centroids.
+    Checked both directions with anti-joins over all four output
+    columns."""
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
     book = similarity.pq_codebook(emb, m=16, ksub=64)
     cents = similarity.sample_centroids(emb, 32, "vec_id", "embedding")
-    a = similarity.ivfpq_topk(
-        emb, queries, book, k=10, n_cells=32, nprobe=16, centroids=cents
+    return _split_batch_parity(
+        emb,
+        lambda q: similarity.ivfpq_topk(
+            emb, q, book, k=10, n_cells=32, nprobe=16, centroids=cents
+        ),
     )
-    b = similarity.ivfpq_topk_join(
-        emb, queries, book, k=10, n_cells=32, nprobe=16, centroids=cents
-    )
-    return _join_parity(a, b)
 
 
 def _join_parity(a, b):
     """Both-direction anti-join over all four output columns — the
-    shared body of the four collect-vs-join parity gates."""
+    shared body of the four split-batch parity gates."""
     cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
     miss_ab = a.join(b, cols, "left_anti").agg(
-        F.count("*").alias("_only_collect")
+        F.count("*").alias("_only_a")
     )
     miss_ba = b.join(a, cols, "left_anti").agg(
-        F.count("*").alias("_only_join")
+        F.count("*").alias("_only_b")
     )
     stats = a.agg(F.countDistinct("query_id").alias("n_queries"))
     return stats.crossJoin(miss_ab).crossJoin(miss_ba).select(
         "n_queries",
-        (
-            (F.col("_only_collect") == 0) & (F.col("_only_join") == 0)
-        ).alias("join_parity_ok"),
+        ((F.col("_only_a") == 0) & (F.col("_only_b") == 0)).alias(
+            "join_parity_ok"
+        ),
     )
 
 
 def q_ann_pq_join_parity_check(spark, sf_dir):
-    """The corpus-scale-queries FLAT ADC path (`pq_topk_join` —
-    queries stay a DataFrame, the coded corpus is hash-blocked and
-    each query replicated once per block, one `_blk` equi-join) must
-    be ROW-IDENTICAL to the bounded collect path (`pq_topk`) under
-    the same codebook: same float64 gather-sums, same tie orders,
-    different distribution strategy (VERDICT r07 item 5)."""
+    """Flat ADC (`pq_topk` — queries stay a DataFrame, the coded
+    corpus is hash-blocked and each query replicated once per block,
+    one `_blk` equi-join): the 10-query batch must be ROW-IDENTICAL to
+    its two 5-query halves under the same codebook."""
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
     book = similarity.pq_codebook(emb, m=16, ksub=64)
-    a = similarity.pq_topk(emb, queries, book, k=10)
-    b = similarity.pq_topk_join(emb, queries, book, k=10)
-    return _join_parity(a, b)
+    return _split_batch_parity(
+        emb, lambda q: similarity.pq_topk(emb, q, book, k=10)
+    )
 
 
 def q_ann_ivfadc_join_parity_check(spark, sf_dir):
-    """The corpus-scale-queries IVFADC path (`ivfadc_topk_join` —
-    residual codes from the shared encoder, probe cells assigned in
-    Arrow, one `cell` equi-join, per-distinct-query LUT + per-cell
-    reconstruction tables) must be ROW-IDENTICAL to the bounded
-    collect path (`ivfpq_residual_topk`) under the same codebook and
-    centroids (VERDICT r07 item 5)."""
+    """IVFADC (`ivfpq_residual_topk` — residual codes, probe cells
+    assigned in Arrow, one `cell` equi-join, per-distinct-query LUT +
+    per-cell reconstruction tables): the 10-query batch must be
+    ROW-IDENTICAL to its two 5-query halves under the same codebook
+    and centroids."""
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
     cents = similarity.sample_centroids(emb, 32, "vec_id", "embedding")
     book = similarity.pq_codebook_residual(emb, cents, m=16, ksub=64)
-    a = similarity.ivfpq_residual_topk(
-        emb, queries, book, k=10, n_cells=32, nprobe=16, centroids=cents
+    return _split_batch_parity(
+        emb,
+        lambda q: similarity.ivfpq_residual_topk(
+            emb, q, book, k=10, n_cells=32, nprobe=16, centroids=cents
+        ),
     )
-    b = similarity.ivfadc_topk_join(
-        emb, queries, book, k=10, n_cells=32, nprobe=16, centroids=cents
-    )
-    return _join_parity(a, b)
 
 
 def q_ann_ivfadc_percell_join_parity_check(spark, sf_dir):
-    """The corpus-scale-queries PER-CELL IVFADC path
-    (`ivfadc_percell_topk_join` — codes from the shared
+    """PER-CELL IVFADC (`ivfadc_percell_topk` — codes from
     `residual_encode_percell`, probe cells assigned in Arrow, one
-    `cell` equi-join, per-(query, probed-cell) LUTs) must be
-    ROW-IDENTICAL to the bounded collect path (`ivfadc_percell_topk`)
-    under the same per-cell books and centroids — the join-twin
-    discipline every search formulation carries (round 8), extended
-    to the round-9 per-cell formulation. ksub=128 is the round-11
+    `cell` equi-join, per-(query, probed-cell) LUTs): the 10-query
+    batch must be ROW-IDENTICAL to its two 5-query halves under the
+    same per-cell books and centroids. ksub=128 is the round-11
     headline per-cell config (the r10-measured saturation lift,
     0.74->0.87 unrefined on the clustered bench corpus)."""
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
     cents = similarity.sample_centroids(emb, 16, "vec_id", "embedding")
     books = similarity.pq_codebook_residual_percell(
         emb, cents, m=16, ksub=128
     )
-    a = similarity.ivfadc_percell_topk(
-        emb, queries, books, k=10, nprobe=8, centroids=cents
+    return _split_batch_parity(
+        emb,
+        lambda q: similarity.ivfadc_percell_topk(
+            emb, q, books, k=10, nprobe=8, centroids=cents
+        ),
     )
-    b = similarity.ivfadc_percell_topk_join(
-        emb, queries, books, k=10, nprobe=8, centroids=cents
-    )
-    return _join_parity(a, b)
 
 
 def q_ann_pq_refined_recall_check(spark, sf_dir):
@@ -3486,9 +3487,8 @@ def q_ann_ivfpq_lake_parity_check(spark, sf_dir):
     static `cell IN` partition filter (plan-pinned in
     tests/test_plan_shape.py), and the probe result must be
     IDENTICAL, row for row and rank for rank, to the in-memory
-    `ivfpq_topk_join` under the same model — which the existing gate
-    already holds row-identical to the collect path, closing the
-    chain lake ≡ join ≡ collect."""
+    `ivfpq_topk` under the same model: lake ≡ in-memory, both scored
+    by the one ADC kernel."""
     import os
     import uuid
 
@@ -3502,7 +3502,7 @@ def q_ann_ivfpq_lake_parity_check(spark, sf_dir):
     _reap_scratch_dirs(keep=path)
     similarity.ivfpq_write_index(emb, path, cents, book)
     lake = similarity.ivfpq_probe_lake(spark, path, queries, k=10, nprobe=6)
-    mem = similarity.ivfpq_topk_join(
+    mem = similarity.ivfpq_topk(
         emb, queries, book, k=10, n_cells=16, nprobe=6, centroids=cents
     )
     cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
@@ -3529,10 +3529,8 @@ def q_ann_ivfadc_percell_lake_parity_check(spark, sf_dir):
     two encodings), the probe reads the model from the index's own
     metadata and applies the static `cell IN` partition filter, and
     the probe result must be IDENTICAL, row for row and rank for
-    rank, to the in-memory `ivfadc_percell_topk_join` under the same
-    model — which `ann_ivfadc_percell_join_parity_check` already
-    holds row-identical to the collect path, closing the chain
-    lake ≡ join ≡ collect for the round-9 formulation too. ksub=128
+    rank, to the in-memory `ivfadc_percell_topk` under the same
+    model: lake ≡ in-memory for the round-9 formulation too. ksub=128
     is the round-11 headline per-cell config."""
     import os
     import uuid
@@ -3552,7 +3550,7 @@ def q_ann_ivfadc_percell_lake_parity_check(spark, sf_dir):
     lake = similarity.ivfadc_percell_probe_lake(
         spark, path, queries, k=10, nprobe=6
     )
-    mem = similarity.ivfadc_percell_topk_join(
+    mem = similarity.ivfadc_percell_topk(
         emb, queries, books, k=10, nprobe=6, centroids=cents
     )
     cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
@@ -3580,8 +3578,8 @@ def q_ann_ivfadc_percell_lakebooks_parity_check(spark, sf_dir):
     the inline-books store's, and a probe — whose scan tasks read
     only the probed cells' book files — must be IDENTICAL, row for
     row and rank for rank, to the inline-meta store's probe AND to
-    the in-memory collect path (`ivfadc_percell_topk`) under the
-    same frozen model: partitioned ≡ broadcast ≡ collect. The two
+    the in-memory search (`ivfadc_percell_topk`) under the
+    same frozen model: partitioned ≡ inline ≡ in-memory. The two
     fits are independent evaluations of the same deterministic plan
     ((hash, id)-ordered sample, hash-sorted groups), so the models
     agree without sharing driver state."""
@@ -3661,7 +3659,7 @@ def q_ann_ivfpq_lake_refresh_parity_check(spark, sf_dir):
     re-encodes exactly those rows under the same staging +
     fitted-manifest discipline as build. The probe over the
     refreshed store must then be IDENTICAL, row for row and rank for
-    rank, to the in-memory collect path (`ivfadc_percell_topk`)
+    rank, to the in-memory search (`ivfadc_percell_topk`)
     under the merged model READ BACK FROM THE LAKE (seed books for
     seed cells + the refresh fit for the drifted one) — refresh is
     invisible to the probe path and visible only as recall.
@@ -3737,7 +3735,7 @@ def q_ann_ivfpq_lake_delete_parity_check(spark, sf_dir):
     rebuild): tombstones are epoch-cut log entries
     (`IvfpqLakeIndex.delete`), so a probe over (build ∪ delete D ∪
     re-add R⊂D) must be IDENTICAL, row for row and rank for rank, to
-    the in-memory collect path (`ivfadc_percell_topk`) over the LIVE
+    the in-memory search (`ivfadc_percell_topk`) over the LIVE
     corpus (all − D ∪ R) under the lake's own books — deletes are
     invisible to ranking, visible only as absence. Then `compact`
     runs: tombstones are physically applied BEFORE the epoch merge
@@ -3843,7 +3841,7 @@ def q_ann_ivfpq_lake_upsert_parity_check(spark, sf_dir):
     halves; pytest-pinned in tests/test_ann_streaming.py) and appends
     the new versions as `epoch`. A probe over build(corpus) +
     upsert_batch(changed rows) must be IDENTICAL, row for row and
-    rank for rank, to the in-memory `ivfpq_topk_join` over the
+    rank for rank, to the in-memory `ivfpq_topk` over the
     UPDATED corpus under the same frozen model — updates are visible
     only as the new vectors, never as duplicates or stale ranks. The
     changed rows flip their embedding sign (vec_id≡0 mod 5) — a
@@ -3874,7 +3872,7 @@ def q_ann_ivfpq_lake_upsert_parity_check(spark, sf_dir):
     idx.build(emb, cents, codebook=book)
     idx.upsert_batch(updated.where(F.col("vec_id") % 5 == 0))
     lake = idx.probe(queries, k=10, nprobe=6)
-    mem = similarity.ivfpq_topk_join(
+    mem = similarity.ivfpq_topk(
         updated, queries, book, k=10, n_cells=16, nprobe=6,
         centroids=cents,
     )
@@ -4188,7 +4186,7 @@ def q_ann_percell_refresh_snapshot_check(spark, sf_dir):
     (pre-rewrite fitted set from the backup meta + the kernel's
     manifest-authoritative zero-book rule), `refresh_books` must then
     roll back and converge, and the refreshed probe must equal the
-    in-memory collect path under the merged lake model. Crash-matrix
+    in-memory search under the merged lake model. Crash-matrix
     mechanics (roll-forward on committed refreshes, __restoring
     resume, donor-book debris) are pytest-pinned
     (tests/test_ivfpq_refresh.py, tests/test_snapshot_dedup.py)."""
@@ -4726,7 +4724,7 @@ def q_ann_ivfpq_incremental_parity_check(spark, sf_dir):
     head — the highest epoch is never absorbed, so a streaming
     redelivery cannot overwrite compacted state) — and the probe over
     the compacted store must be IDENTICAL, row for row and rank for
-    rank, to the in-memory `ivfpq_topk_join` over the full corpus
+    rank, to the in-memory `ivfpq_topk` over the full corpus
     under the same model.
     Appends, epoch boundaries, and compaction are invisible to search
     results; only then is "append without re-encoding the corpus" a
@@ -4749,7 +4747,7 @@ def q_ann_ivfpq_incremental_parity_check(spark, sf_dir):
     idx.add_batch(emb.where(F.col("vec_id") % 3 == 2))
     stats = idx.compact()
     inc = idx.probe(queries, k=10, nprobe=6)
-    mem = similarity.ivfpq_topk_join(
+    mem = similarity.ivfpq_topk(
         emb, queries, book, k=10, n_cells=16, nprobe=6, centroids=cents
     )
     cols = ["query_id", "neighbor_id", "adc_cosine", "rank"]
