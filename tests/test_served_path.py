@@ -16,16 +16,21 @@ what the served answer looks like.
 - The Flight server and the json/table renders use Arrow without a
   pandas hop: a nullable UINT64 field with a null stays int64, and
   nanos above 2^53 come back exact.
+- Both writers put a row in the `dt` partition of its floored UTC day,
+  the day the reader prunes by, also 1 ns before midnight and 1 ns
+  before the epoch; `persist` runs no Spark job.
 """
 
 import json
+import os
 import uuid
 from contextlib import contextmanager
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from zikeiretsu_rs_spark.datamodel import DataPoint, FieldType
+from zikeiretsu_rs_spark.datamodel import DataPoint, FieldType, metrics_schema
 from zikeiretsu_rs_spark.datetime_util import NANOS_PER_SEC
 from zikeiretsu_rs_spark.engine import Engine
 
@@ -261,3 +266,67 @@ class TestArrowAtTheBoundary:
         }
         table = eng.execute(self.QUERY, now_nanos=NOW)
         assert str(2**62) in table and "e+" not in table, table
+
+
+MIDNIGHT = nanos(2024, 1, 1)
+LAST_SECOND = nanos(2023, 12, 31, 23, 59, 59)
+
+
+def _write(spark, store, points, writer: str) -> None:
+    if writer == "persist":
+        store.push_multi(points)
+        store.persist()
+    else:
+        rows = [(p.timestamp_nano, *p.field_values) for p in points]
+        store.persist_dataframe(
+            spark.createDataFrame(rows, schema=metrics_schema(store.field_types))
+        )
+
+
+class TestDayKey:
+    """A second before midnight, 100 ns and 1 ns before it, midnight
+    itself, and 1 ns before the epoch."""
+
+    @pytest.fixture(params=["persist", "persist_dataframe"])
+    def edge(self, request, spark, tmp_ctx):
+        eng = Engine(spark, tmp_ctx)
+        store = eng.writable_store("m", [FieldType.FLOAT64])
+        stamps = [LAST_SECOND, MIDNIGHT - 100, MIDNIGHT - 1, MIDNIGHT, -1]
+        _write(spark, store, [DataPoint.new(t, 1.0) for t in stamps], request.param)
+        return eng, store
+
+    def test_rows_land_in_their_floored_day(self, edge):
+        _, store = edge
+        days = {
+            d: sorted(pq.read_table(os.path.join(store.block_dir, d)).column("ts").to_pylist())
+            for d in os.listdir(store.block_dir)
+            if d.startswith("dt=")
+        }
+        assert days == {
+            "dt=1969-12-31": [-1],
+            "dt=2023-12-31": [LAST_SECOND, MIDNIGHT - 100, MIDNIGHT - 1],
+            "dt=2024-01-01": [MIDNIGHT],
+        }
+
+    @pytest.mark.parametrize(
+        "cond, expected",
+        [
+            ("ts in ('2023-12-31 23:59:59', '2023-12-31 23:59:59.999999950')", [LAST_SECOND, MIDNIGHT - 100]),
+            ("ts <=|5 '2023-12-31 23:59:59.999999950'", [-1, LAST_SECOND, MIDNIGHT - 100]),
+        ],
+    )
+    def test_reader_finds_rows_before_midnight(self, edge, cond, expected):
+        eng, _ = edge
+        df = eng.execute_to_df(f"with format_datetime = false select * from m where {cond}", now_nanos=NOW)
+        assert df.toArrow().column("ts").to_pylist() == expected
+
+
+class TestPersistRunsNoSparkJob:
+    def test_persist_across_midnight(self, spark, tmp_ctx):
+        store = Engine(spark, tmp_ctx).writable_store("m", [FieldType.FLOAT64])
+        store.push_multi(
+            [DataPoint.new(MIDNIGHT + i * 600 * NANOS_PER_SEC, 1.0) for i in range(-3, 3)]
+        )
+        written, jobs = _jobs(spark, store.persist)
+        assert (written, jobs) == (6, 0)
+        assert sorted(os.listdir(store.block_dir)) == ["dt=2023-12-31", "dt=2024-01-01"]

@@ -3,12 +3,16 @@ URIs (file://, s3://, gs://, hdfs://), via ``pyarrow.fs``.
 
 The reference ships a GCS download/upload state machine
 (`/root/reference/zikeiretsu/src/tsdb/cloud/mod.rs`); the rebuild's
-position (SURVEY §2.1 S5/S10) is that Spark reads and writes the object
-store directly for BLOCK data, so only the small metadata JSONs
-(manifest / schema / rollup state) need engine-side IO. This module is
-that IO:
+position (SURVEY §2.1 S5/S10) is that the object store is read and
+written directly. Spark writes BLOCK data from DataFrames
+(`persist_dataframe`, compaction, purge); the engine-side IO here
+covers the small metadata JSONs (manifest / schema / rollup state) and
+the one-file-per-day blocks `WritableStore.persist` writes from its
+driver-resident buffer. Both writes are atomic:
 
-- local paths keep the crash-safe ``tempfile + os.replace`` pattern;
+- local paths write a `.`-prefixed temp name, then ``os.replace`` it
+  (Spark's file index and the `*.parquet` / `*.json` listings skip
+  the temp name, so a crash never surfaces a half-written file);
 - URIs write the object directly — a single-object PUT is atomic on
   every real object store (rename is NOT, which is why the tempfile
   dance would be wrong there).
@@ -94,16 +98,17 @@ def read_json(path: str) -> dict:
         return json.loads(fh.read().decode("utf-8"))
 
 
-def write_json_atomic(path: str, doc: dict) -> None:
-    """Crash-safe JSON write: tempfile+rename locally, direct object
-    PUT (atomic per object) on stores."""
+def _write_atomic(path: str, write) -> None:
+    """Run `write(binary_file)` so `path` appears whole or not at all:
+    a `.`-prefixed tempfile + rename locally, a direct object PUT
+    (atomic per object) on stores."""
     if not is_uri(path):
         d = os.path.dirname(path)
         os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+        fd, tmp = tempfile.mkstemp(dir=d, prefix=".", suffix=".tmp")
         try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump(doc, fh)
+            with os.fdopen(fd, "wb") as fh:
+                write(fh)
             os.replace(tmp, path)
         finally:
             if os.path.exists(tmp):
@@ -113,7 +118,20 @@ def write_json_atomic(path: str, doc: dict) -> None:
     parent = p.rsplit("/", 1)[0]
     f.create_dir(parent, recursive=True)  # no-op on flat object stores
     with f.open_output_stream(p) as fh:
-        fh.write(json.dumps(doc).encode("utf-8"))
+        write(fh)
+
+
+def write_json_atomic(path: str, doc: dict) -> None:
+    """Crash-safe JSON write (see `_write_atomic`)."""
+    _write_atomic(path, lambda fh: fh.write(json.dumps(doc).encode("utf-8")))
+
+
+def write_parquet_atomic(path: str, table, **options) -> None:
+    """Crash-safe write of the pyarrow Table `table` as one Parquet
+    file (see `_write_atomic`); `options` go to `pq.write_table`."""
+    import pyarrow.parquet as pq
+
+    _write_atomic(path, lambda fh: pq.write_table(table, fh, **options))
 
 
 def list_suffix_names(dir_path: str, suffix: str) -> list[str]:

@@ -19,7 +19,7 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..datamodel import PARTITION_COLUMN, TS_COLUMN
+from ..datamodel import PARTITION_COLUMN, TS_COLUMN, day_key
 from ..datetime_util import NANOS_PER_DAY, now_utc_nanos
 from . import fsio
 from .lockfile import metrics_lock, new_writer_id
@@ -94,26 +94,20 @@ def _purge_locked(
     since_nanos: int,
     until_nanos: int,
 ) -> None:
-    first_full_day = -(-since_nanos // NANOS_PER_DAY)  # ceil
-    last_full_day = until_nanos // NANOS_PER_DAY  # exclusive
-    from datetime import date
-
-    epoch = date(1970, 1, 1).toordinal()
-
-    def day_str(day: int) -> str:
-        return date.fromordinal(epoch + day).isoformat()
-
+    # days wholly inside [since, until): from the day of the first
+    # midnight at or after `since` up to (excluding) `until`'s own day
+    first_full_day = day_key(-(-since_nanos // NANOS_PER_DAY) * NANOS_PER_DAY)
+    end_day = day_key(until_nanos)
     for name in list(os.listdir(block_dir)):
         if not name.startswith(f"{PARTITION_COLUMN}="):
             continue
         dt = name.split("=", 1)[1]
-        if day_str(first_full_day) <= dt and dt < day_str(last_full_day):
+        if first_full_day <= dt < end_day:
             shutil.rmtree(os.path.join(block_dir, name))
 
     # rewrite boundary partitions that still contain purged rows
     remaining_days = set()
-    for boundary in (since_nanos // NANOS_PER_DAY, (until_nanos - 1) // NANOS_PER_DAY):
-        d = day_str(boundary)
+    for d in (day_key(since_nanos), day_key(until_nanos - 1)):
         if os.path.isdir(os.path.join(block_dir, f"{PARTITION_COLUMN}={d}")):
             remaining_days.add(d)
     for d in remaining_days:

@@ -30,7 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..datamodel import PARTITION_COLUMN, TS_COLUMN
+from ..datamodel import PARTITION_COLUMN, TS_COLUMN, day_key
 from . import fsio
 from .manifest import Manifest
 
@@ -59,11 +59,7 @@ def _partition_fingerprints(db_dir: str, metrics: str) -> dict[str, str]:
         first = e.since_nanos // NANOS_PER_DAY
         last = e.until_nanos // NANOS_PER_DAY
         for day in range(first, last + 1):
-            from datetime import date
-
-            dt = date.fromordinal(
-                date(1970, 1, 1).toordinal() + day
-            ).isoformat()
+            dt = day_key(day * NANOS_PER_DAY)
             if dt in on_disk:
                 by_day.setdefault(dt, []).append(
                     f"{e.since_nanos}:{e.until_nanos}:{e.rows}:"

@@ -3,19 +3,27 @@
 Reference mapping (SURVEY.md §1.5):
 - `DataPoint { timestamp_nano, field_values }`
   (data_types/datapoint.rs:10-13) -> a row `(ts, f0, f1, ...)`.
-- `FieldType` (data_types/field.rs:99-107) -> Spark types. The reference
-  persists only Float64/Bool (block/write.rs:89-91); the rebuild persists
-  every type via Parquet but keeps the enum for API parity.
+- `FieldType` (data_types/field.rs:99-107) -> Spark and Arrow types. The
+  reference persists only Float64/Bool (block/write.rs:89-91); the
+  rebuild persists every type via Parquet but keeps the enum for API
+  parity.
 - Column names are optional and query-supplied; physical columns are
   positional `f0..fn` with `ts` first.
+- Blocks are partitioned by `dt`, the UTC day of `ts`. `day_key` and
+  `day_key_sql` are the one definition of that key, for writers and
+  readers alike.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date
 from enum import Enum
 
+import pyarrow as pa
 from pyspark.sql import types as T
+
+from .datetime_util import NANOS_PER_DAY
 
 
 class FieldType(Enum):
@@ -35,15 +43,20 @@ class FieldType(Enum):
         type (a string counts 20)."""
         return _SPARK_TYPES[self][1]
 
+    def arrow_type(self) -> pa.DataType:
+        return _SPARK_TYPES[self][2]
 
+
+# FieldType -> (Spark type, byte width, Arrow type). The Arrow type is
+# the one a Parquet file written from Arrow reads back as the Spark type.
 _SPARK_TYPES = {
-    FieldType.FLOAT64: (T.DoubleType(), 8),
-    FieldType.BOOL: (T.BooleanType(), 1),
-    FieldType.STRING: (T.StringType(), 20),
-    FieldType.UINT64: (T.LongType(), 8),
-    FieldType.TIMESTAMP_NANO: (T.LongType(), 8),
-    FieldType.TIMESTAMP_SEC: (T.LongType(), 8),
-    FieldType.VACANT: (T.NullType(), 1),
+    FieldType.FLOAT64: (T.DoubleType(), 8, pa.float64()),
+    FieldType.BOOL: (T.BooleanType(), 1, pa.bool_()),
+    FieldType.STRING: (T.StringType(), 20, pa.string()),
+    FieldType.UINT64: (T.LongType(), 8, pa.int64()),
+    FieldType.TIMESTAMP_NANO: (T.LongType(), 8, pa.int64()),
+    FieldType.TIMESTAMP_SEC: (T.LongType(), 8, pa.int64()),
+    FieldType.VACANT: (T.NullType(), 1, pa.null()),
 }
 
 TS_COLUMN = "ts"
@@ -73,6 +86,33 @@ def metrics_schema(field_types: list[FieldType]) -> T.StructType:
     for name, ft in zip(field_column_names(len(field_types)), field_types):
         fields.append(T.StructField(name, ft.spark_type(), nullable=True))
     return T.StructType(fields)
+
+
+def metrics_arrow_schema(field_types: list[FieldType]) -> pa.Schema:
+    """The Arrow twin of `metrics_schema`."""
+    fields = [pa.field(TS_COLUMN, pa.int64(), nullable=False)]
+    for name, ft in zip(field_column_names(len(field_types)), field_types):
+        fields.append(pa.field(name, ft.arrow_type()))
+    return pa.schema(fields)
+
+
+_EPOCH_ORDINAL = date(1970, 1, 1).toordinal()
+
+
+def day_key(nanos: int) -> str:
+    """The `dt` partition value (UTC `YYYY-MM-DD`) of epoch nanos
+    `nanos`: the day is floored, so 1 ns before midnight stays in its
+    day and pre-epoch instants fall in the day before."""
+    return date.fromordinal(_EPOCH_ORDINAL + nanos // NANOS_PER_DAY).isoformat()
+
+
+def day_key_sql(ts: str) -> str:
+    """SQL-text `day_key` of the long nanos expression `ts`. The day
+    number comes from exact integer math, (ts - pmod(ts, D)) div D,
+    which floors toward -inf; a double division would round the last
+    fraction of a microsecond before midnight into the next day."""
+    days = f"(({ts}) - pmod({ts}, {NANOS_PER_DAY}L)) div {NANOS_PER_DAY}L"
+    return f"CAST(date_from_unix_date({days}) AS STRING)"
 
 
 def nanos_spine_expr(col, dtype: str):

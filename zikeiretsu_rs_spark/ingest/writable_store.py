@@ -3,37 +3,52 @@
 
 Lifecycle parity:
 - `push` / `push_multi` buffer datapoints (mod.rs:131-165). The
-  reference's WAL (S4/S9) is intentionally not rebuilt: a Parquet batch
-  write is atomic at the directory level, and streaming ingest gets
+  reference's WAL (S4/S9) is intentionally not rebuilt: every block
+  file appears atomically (see below), and streaming ingest gets
   durability from Structured Streaming checkpoints (SURVEY §2.1).
 - `apply_dirties` stable-sorts the dirty buffer by ts and merges into
   the sorted buffer (mod.rs:167-208; stable sort preserves the
   reference's insertion tie-order for equal timestamps).
-- `persist(condition)` writes the selected range as one "block" (an
-  append of Parquet files partitioned by `dt = date(ts)`), updates the
-  manifest with [min, max] ts / row count / distinct-ts count (the
-  reference's `timestamp_num`, storage/api/write.rs:176-182), and
-  optionally evicts the persisted rows (mod.rs:230-275).
+- `persist(condition)` writes the selected range of the sorted buffer
+  as one "block" straight from the driver, like the reference's
+  write of its sorted buffer to block files (mod.rs:230-275,
+  storage/api/write.rs:21-121): the rows pass the same type check
+  `spark.createDataFrame` runs, become one pyarrow Table, and land as
+  one Parquet file per `dt` day, each written atomically through
+  `fsio.write_parquet_atomic`. The manifest entry's [min, max] ts, row
+  count and distinct-ts count (the reference's `timestamp_num`,
+  write.rs:176-182) are read off the sorted buffer. It runs no Spark
+  job. It optionally evicts the persisted rows.
 - `purge(range)` drops in-memory rows in [since, until)
   (mod.rs:215-227).
 
-Scale design: the buffer is a convenience for the library API and
-tests; bulk ingest goes through `persist_dataframe`, which accepts an
-arbitrary Spark DataFrame (any size), derives the `dt` partition column,
-and writes with `sortWithinPartitions(ts)` so every file is
-ts-ascending — that keeps Parquet row-group min/max stats tight, which
-is what replaces the reference's sorted block files at query time.
+Scale design: the buffer is a convenience for the library API, tests
+and small frequent appends, and it lives in driver memory, so a
+persist of it is a driver-side write. Bulk ingest goes through
+`persist_dataframe`, which accepts an arbitrary Spark DataFrame (any
+size; streaming `foreachBatch` uses it too), derives the `dt` partition
+column and writes with `sortWithinPartitions(ts)`. Both writers put
+every row in the `dt` partition `datamodel.day_key` names and write
+ts-ascending files — that keeps Parquet row-group min/max stats tight,
+which is what replaces the reference's sorted block files at query
+time.
 """
 
 from __future__ import annotations
 
 import bisect
+import uuid
 from dataclasses import dataclass
+from operator import attrgetter
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _make_type_verifier
 
-from ..catalog import errorjournal
+from ..catalog import errorjournal, fsio
 from ..catalog.lockfile import (
     metrics_lock,
     new_writer_id,
@@ -46,11 +61,14 @@ from ..datamodel import (
     TS_COLUMN,
     DataPoint,
     FieldType,
+    day_key,
+    day_key_sql,
+    metrics_arrow_schema,
     metrics_schema,
     nanos_spine_expr,
     validate_metrics_name,
 )
-from ..datetime_util import now_utc_nanos
+from ..datetime_util import NANOS_PER_DAY, NANOS_PER_SEC, now_utc_nanos
 from ..errors import StorageError
 
 
@@ -80,13 +98,10 @@ def to_nano_spine(df: DataFrame, ts_col: str = TS_COLUMN) -> DataFrame:
 
 
 def with_partition_column(df: DataFrame, ts_col: str = TS_COLUMN) -> DataFrame:
-    """Derive `dt = YYYY-MM-DD` (UTC) from the nano timestamp column.
-    This is the engine's partition-pruning key (SURVEY §4: replaces the
-    reference's block-list binary search)."""
-    return df.withColumn(
-        PARTITION_COLUMN,
-        F.date_format(F.timestamp_micros((F.col(ts_col) / 1000).cast("long")), "yyyy-MM-dd"),
-    )
+    """Derive `dt = YYYY-MM-DD` (UTC, `datamodel.day_key`) from the nano
+    timestamp column. This is the engine's partition-pruning key
+    (SURVEY §4: replaces the reference's block-list binary search)."""
+    return df.withColumn(PARTITION_COLUMN, F.expr(day_key_sql(f"`{ts_col}`")))
 
 
 class WritableStore:
@@ -196,32 +211,70 @@ class WritableStore:
         return f"{self.db_dir}/block/{self.metrics}"
 
     def persist(self, condition: PersistCondition | None = None) -> int:
-        """Persist buffered rows in the condition range as one block.
-        Returns the number of rows written."""
+        """Persist buffered rows in the condition range as one block,
+        written from the driver with no Spark job. Returns the number
+        of rows written.
+
+        A value its field type rejects raises the same error
+        `spark.createDataFrame` raises, before the lock is taken:
+        nothing is written and the buffer is kept."""
         condition = condition or PersistCondition()
         self.apply_dirties()
+        ts_of = attrgetter("timestamp_nano")
         lo = condition.since_nanos
         hi = condition.until_nanos
-        selected = [
-            d
-            for d in self._sorted
-            if (lo is None or d.timestamp_nano >= lo)
-            and (hi is None or d.timestamp_nano < hi)
-        ]
+        i = 0 if lo is None else bisect.bisect_left(self._sorted, lo, key=ts_of)
+        j = len(self._sorted) if hi is None else bisect.bisect_left(self._sorted, hi, key=ts_of)
+        selected = self._sorted[i:j]
         if not selected:
             return 0
         rows = [(d.timestamp_nano, *d.field_values) for d in selected]
-        df = self.spark.createDataFrame(rows, schema=metrics_schema(self.field_types))
-        self.persist_dataframe(df)
+        verify = _make_type_verifier(metrics_schema(self.field_types))
+        for row in rows:
+            verify(row)
+        schema = metrics_arrow_schema(self.field_types)
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)],
+            schema=schema,
+        )
+        # the buffer is ts-sorted: each day is one run of rows, and the
+        # stats are its ends plus a count of ts changes
+        ts = table.column(TS_COLUMN).to_numpy()
+        day = ts // NANOS_PER_DAY  # floors, as day_key does
+        cuts = [0, *(np.flatnonzero(day[1:] != day[:-1]) + 1).tolist(), len(ts)]
+        # like Spark's writer, dictionary-encode only the columns whose
+        # values repeat enough to pay for the dictionary, and keep no
+        # serialized Arrow schema in the footer
+        options = dict(
+            use_dictionary=[
+                f.name for f, col in zip(schema, table.columns)
+                if f.type != pa.null() and 2 * pc.count_distinct(col).as_py() <= len(col)
+            ],
+            store_schema=False,
+        )
+        with metrics_lock(
+            self.db_dir, self.metrics, self.writer_id, self.lock_timeout_sec
+        ):
+            written: list[str] = []
+            try:
+                for a, b in zip(cuts, cuts[1:]):
+                    path = (
+                        f"{self.block_dir}/{PARTITION_COLUMN}={day_key(int(ts[a]))}/"
+                        f"part-{uuid.uuid4()}.parquet"
+                    )
+                    fsio.write_parquet_atomic(path, table.slice(a, b - a), **options)
+                    written.append(path)
+            except BaseException:
+                # a block lands whole or not at all: the buffer keeps
+                # the rows, so a retry must not find some days written
+                for path in written:
+                    fsio.delete(path)
+                raise
+            self._add_block(
+                int(ts[0]), int(ts[-1]), len(ts), 1 + int(np.count_nonzero(ts[1:] != ts[:-1]))
+            )
         if condition.remove_from_memory:
-            self._sorted = [
-                d
-                for d in self._sorted
-                if not (
-                    (lo is None or d.timestamp_nano >= lo)
-                    and (hi is None or d.timestamp_nano < hi)
-                )
-            ]
+            del self._sorted[i:j]
         return len(rows)
 
     def persist_dataframe(self, df: DataFrame) -> None:
@@ -231,9 +284,7 @@ class WritableStore:
         The per-metrics lockfile (T5) guards the block-append +
         manifest read-modify-write against other *processes* sharing
         the warehouse, mirroring write_datas_to_local
-        (write.rs:185-202). A manifest failure after the block files
-        landed is journaled (T6) so `.block_list`-vs-disk drift is
-        operator-visible and repairable (`catalog/repair.py`)."""
+        (write.rs:185-202)."""
         df = to_nano_spine(df)
         stats = df.agg(
             F.min(TS_COLUMN).alias("mn"),
@@ -254,25 +305,34 @@ class WritableStore:
                 .partitionBy(PARTITION_COLUMN)
                 .parquet(self.block_dir)
             )
-            now = now_utc_nanos()
-            try:
-                self.manifest.add_entry(
-                    BlockEntry(
-                        since_nanos=int(stats["mn"]),
-                        until_nanos=int(stats["mx"]),
-                        rows=int(stats["rows"]),
-                        distinct_ts=int(stats["dts"]),
-                        written_at_nanos=now,
-                    ),
-                    updated_at_nanos=now,
-                )
-            except Exception as e:
-                errorjournal.journal(
-                    self.db_dir,
-                    self.metrics,
-                    errorjournal.FAILED_TO_UPDATE_BLOCK_LIST,
-                    since_sec=int(stats["mn"]) // 10**9,
-                    until_sec=int(stats["mx"]) // 10**9 + 1,
-                    detail=repr(e),
-                )
-                raise
+            self._add_block(
+                int(stats["mn"]), int(stats["mx"]), int(stats["rows"]), int(stats["dts"])
+            )
+
+    def _add_block(self, mn: int, mx: int, rows: int, distinct_ts: int) -> None:
+        """Record a block whose files have landed in the manifest. A
+        manifest failure after that is journaled (T6), so
+        `.block_list`-vs-disk drift is operator-visible and repairable
+        (`catalog/repair.py`), then re-raised."""
+        now = now_utc_nanos()
+        try:
+            self.manifest.add_entry(
+                BlockEntry(
+                    since_nanos=mn,
+                    until_nanos=mx,
+                    rows=rows,
+                    distinct_ts=distinct_ts,
+                    written_at_nanos=now,
+                ),
+                updated_at_nanos=now,
+            )
+        except Exception as e:
+            errorjournal.journal(
+                self.db_dir,
+                self.metrics,
+                errorjournal.FAILED_TO_UPDATE_BLOCK_LIST,
+                since_sec=mn // NANOS_PER_SEC,
+                until_sec=mx // NANOS_PER_SEC + 1,
+                detail=repr(e),
+            )
+            raise

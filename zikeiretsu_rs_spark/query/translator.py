@@ -49,20 +49,14 @@ from ..datamodel import (
     PARTITION_COLUMN,
     TS_COLUMN,
     FieldType,
+    day_key,
     field_column_names,
     metrics_schema,
 )
-from ..datetime_util import NANOS_PER_DAY, NANOS_PER_SEC, rfc3339_offset_suffix
+from ..datetime_util import NANOS_PER_SEC, rfc3339_offset_suffix
 from ..errors import InvalidColumnDefinition
 from ..operators.limits import bound_predicate, distinct_ts_threshold
 from .analyzer import LimitKind, SearchCondition, SearchMetricsQuery
-
-
-def _dt_string(nanos: int) -> str:
-    from datetime import date
-
-    days = nanos // NANOS_PER_DAY
-    return date.fromordinal(date(1970, 1, 1).toordinal() + days).isoformat()
 
 
 def _range_predicate(cond: SearchCondition) -> str | None:
@@ -72,11 +66,11 @@ def _range_predicate(cond: SearchCondition) -> str | None:
     terms = []
     if cond.since_nanos is not None:
         terms.append(f"{TS_COLUMN} >= {cond.since_nanos}L")
-        terms.append(f"{PARTITION_COLUMN} >= '{_dt_string(cond.since_nanos)}'")
+        terms.append(f"{PARTITION_COLUMN} >= '{day_key(cond.since_nanos)}'")
     if cond.until_nanos is not None:
         terms.append(f"{TS_COLUMN} < {cond.until_nanos}L")
         # until is exclusive but sits inside its day partition
-        terms.append(f"{PARTITION_COLUMN} <= '{_dt_string(cond.until_nanos)}'")
+        terms.append(f"{PARTITION_COLUMN} <= '{day_key(cond.until_nanos)}'")
     return " AND ".join(terms) or None
 
 
@@ -86,7 +80,7 @@ def _block_bound_predicate(bound: int, tail: bool) -> str:
     op = ">=" if tail else "<="
     return (
         f"{bound_predicate(bound, tail=tail)} "
-        f"AND {PARTITION_COLUMN} {op} '{_dt_string(bound)}'"
+        f"AND {PARTITION_COLUMN} {op} '{day_key(bound)}'"
     )
 
 
