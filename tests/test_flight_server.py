@@ -172,9 +172,9 @@ class TestFlightBoundary:
             client.close()
 
     def test_concurrent_clients(self, flight_engine):
-        """Concurrent do_get calls serialize on the engine's Spark
-        session (the reference's single DB handle behind its service)
-        and every client gets a complete stream."""
+        """Concurrent do_get calls share the engine (the reference's
+        single DB handle behind its service) and every client gets a
+        complete stream."""
         from concurrent.futures import ThreadPoolExecutor
 
         _, server, base = flight_engine
@@ -192,6 +192,27 @@ class TestFlightBoundary:
                 )
             )
         assert all(t.num_rows == 48 for t, _ in results)
+
+
+    def test_small_query_does_not_queue_behind_spark_work(self, flight_engine):
+        """The server's lock guards Spark work only: while it is held, a
+        small range (read from the blocks with pyarrow) still answers."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        _, server, base = flight_engine
+        q = (
+            "with format_datetime = false "
+            "select * from trades where ts = '2024-01-01 06:00'"
+        )
+        ex = ThreadPoolExecutor(1)
+        server._lock.acquire()
+        try:
+            fut = ex.submit(execute_flight, server.location, q, base)
+            table, _ = fut.result(timeout=60)
+        finally:
+            server._lock.release()
+            ex.shutdown()
+        assert table.num_rows == 2
 
 
 class TestRemoteBoundary:

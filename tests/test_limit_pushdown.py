@@ -6,7 +6,12 @@ e2e asserts (a) the limited scan carries a LITERAL ts bound (no
 scalar-broadcast join) restricted to the pruned partitions, (b) results
 stay exact, (c) the overcount case (duplicate timestamps across blocks)
 falls back to the unpruned scalar-threshold path instead of truncating.
+The plan pins run the Spark shape by lowering
+`spark.sql.files.openCostInBytes` below the kept blocks' size; their
+Arrow-shape twins read only the pruned `dt=` dirs.
 """
+
+import os
 
 from zikeiretsu_rs_spark.catalog.manifest import BlockEntry, Manifest
 from zikeiretsu_rs_spark.datamodel import DataPoint, FieldType
@@ -14,6 +19,7 @@ from zikeiretsu_rs_spark.datetime_util import NANOS_PER_DAY, NANOS_PER_SEC
 from zikeiretsu_rs_spark.engine import Engine
 
 from test_datetime_util import nanos
+from test_served_path import _jobs, _task_bytes
 
 
 def be(since, until, num):
@@ -152,10 +158,11 @@ class TestLimitPrePruneE2E:
 
     def test_head_limit_prunes_blocks_to_literal_bound(self, spark, tmp_ctx):
         engine, base = self._store_three_days(spark, tmp_ctx)
-        df = engine.execute_to_df(
-            "with format_datetime = false select * from m where ts >=|3 '2023-01-01'",
-            now_nanos=base,
-        )
+        with _task_bytes(spark, "16b"):  # the kept block is 80 bytes
+            df = engine.execute_to_df(
+                "with format_datetime = false select * from m where ts >=|3 '2023-01-01'",
+                now_nanos=base,
+            )
         rows = df.collect()
         assert [r["ts"] for r in rows] == [base, base + NANOS_PER_SEC, base + 2 * NANOS_PER_SEC]
         plan = plan_of(spark, df)
@@ -168,15 +175,57 @@ class TestLimitPrePruneE2E:
 
     def test_tail_limit_prunes_blocks(self, spark, tmp_ctx):
         engine, base = self._store_three_days(spark, tmp_ctx)
-        df = engine.execute_to_df(
-            "with format_datetime = false select * from m where ts <=|2 '2024-12-31'",
-            now_nanos=base,
-        )
+        with _task_bytes(spark, "16b"):
+            df = engine.execute_to_df(
+                "with format_datetime = false select * from m where ts <=|2 '2024-12-31'",
+                now_nanos=base,
+            )
         last = base + 2 * NANOS_PER_DAY + 4 * NANOS_PER_SEC
         assert [r["ts"] for r in df.collect()] == [last - NANOS_PER_SEC, last]
         plan = plan_of(spark, df)
         assert "__ts_threshold" not in plan
         assert f"GreaterThanOrEqual(ts,{last - NANOS_PER_SEC})" in plan, plan
+
+    @staticmethod
+    def _dirs_read(monkeypatch) -> list[str]:
+        """The `dt=` dirs the Arrow shape reads, as they are listed."""
+        from zikeiretsu_rs_spark.query import translator
+
+        seen: list[str] = []
+        real = translator._day_dirs
+
+        def spy(*args):
+            dirs = real(*args)
+            seen.extend(os.path.basename(d) for d in dirs)
+            return dirs
+
+        monkeypatch.setattr(translator, "_day_dirs", spy)
+        return seen
+
+    def test_head_limit_arrow_shape_reads_pruned_days(self, spark, tmp_ctx, monkeypatch):
+        engine, base = self._store_three_days(spark, tmp_ctx)
+        seen = self._dirs_read(monkeypatch)
+        (table, _), jobs = _jobs(spark, lambda: engine.execute_to_arrow(
+            "with format_datetime = false select * from m where ts >=|3 '2023-01-01'",
+            now_nanos=base,
+        ))
+        assert jobs == 0
+        assert table.column("ts").to_pylist() == [
+            base, base + NANOS_PER_SEC, base + 2 * NANOS_PER_SEC
+        ]
+        assert set(seen) == {"dt=2024-01-01"}
+
+    def test_tail_limit_arrow_shape_reads_pruned_days(self, spark, tmp_ctx, monkeypatch):
+        engine, base = self._store_three_days(spark, tmp_ctx)
+        seen = self._dirs_read(monkeypatch)
+        (table, _), jobs = _jobs(spark, lambda: engine.execute_to_arrow(
+            "with format_datetime = false select * from m where ts <=|2 '2024-12-31'",
+            now_nanos=base,
+        ))
+        assert jobs == 0
+        last = base + 2 * NANOS_PER_DAY + 4 * NANOS_PER_SEC
+        assert table.column("ts").to_pylist() == [last - NANOS_PER_SEC, last]
+        assert set(seen) == {"dt=2024-01-03"}
 
     def test_range_plus_limit_composes(self, spark, tmp_ctx):
         engine, base = self._store_three_days(spark, tmp_ctx)

@@ -1,18 +1,18 @@
 """Served-path shape: what one dialect query costs in Spark jobs, and
 what the served answer looks like.
 
-- A range small enough for one task plans with no Spark job (the scan
-  schema comes from the schema registry, not from footer inference) and
-  collects with exactly one, with no Exchange in the executed plan.
-- A head or tail limit adds at most one threshold job.
+- A range, a head or tail limit and `.describe` small enough for one
+  task run no Spark job through `Engine.execute_to_arrow`: the answer
+  is read from the blocks with pyarrow.
 - With `spark.sql.files.openCostInBytes` below the range's size the
   plan keeps the distributed `orderBy(ts)` and answers the same rows.
 - A limit is sized by the blocks it keeps, not by the whole range.
 - Answers are ts-ascending on both shapes, also when duplicate
   timestamps span two blocks and a late block was persisted out of
   order (the benchmark's checksum ignores order, so only this file
-  guards it).
-- Metadata answers keep their schemas, also when empty.
+  and `test_shape_parity.py` guard it).
+- Metadata answers keep their schemas, also when empty, and
+  `.describe` reads one manifest snapshot per metrics.
 - The Flight server and the json/table renders use Arrow without a
   pandas hop: a nullable UINT64 field with a null stays int64, and
   nanos above 2^53 come back exact.
@@ -107,15 +107,20 @@ def _assert_ascending(ts: list[int]) -> None:
     assert ts == sorted(ts)
 
 
+def _arrow(engine, query):
+    """(`execute_to_arrow`'s table, the Spark jobs it ran)."""
+    (table, _), jobs = _jobs(engine.spark, lambda: engine.execute_to_arrow(query, now_nanos=NOW))
+    return table, jobs
+
+
 class TestOneTaskShape:
-    def test_range_plans_without_jobs_and_collects_with_one(self, engine):
+    def test_range_runs_no_spark_job(self, engine):
         q = (
             "with format_datetime = false "
             "select * from m where ts in ('2024-01-01 00:10', '2024-01-01 02:20')"
         )
-        table, plan_jobs, collect_jobs, executed = _serve(engine, q)
-        assert (plan_jobs, collect_jobs) == (0, 1)
-        assert "Exchange" not in executed, executed
+        table, jobs = _arrow(engine, q)
+        assert jobs == 0
         rows = _rows(table)
         _assert_ascending([t for t, _ in rows])
         assert sorted(rows) == _expected(_ts(10), _ts(140))
@@ -127,15 +132,21 @@ class TestOneTaskShape:
             ("<=|12 '2024-01-01 01:30'", 48, 60, 12),  # minutes 48..59
         ],
     )
-    def test_limit_adds_at_most_one_threshold_job(self, engine, cond, lo, hi, n):
+    def test_limit_runs_no_spark_job(self, engine, cond, lo, hi, n):
         q = f"with format_datetime = false select * from m where ts {cond}"
-        table, plan_jobs, collect_jobs, executed = _serve(engine, q)
-        assert plan_jobs <= 1 and collect_jobs == 1
-        assert "Exchange" not in executed, executed
+        table, jobs = _arrow(engine, q)
+        assert jobs == 0
         rows = _rows(table)
         _assert_ascending([t for t, _ in rows])
         assert sorted(rows) == _expected(_ts(lo), _ts(hi))
         assert len({t for t, _ in rows}) == n
+
+    def test_dataframe_wraps_the_arrow_answer(self, engine):
+        """`execute_to_df` wraps the Arrow answer without a job."""
+        q = "with format_datetime = false select * from m where ts >=|8 '2024-01-01 00:20'"
+        df, jobs = _jobs(engine.spark, lambda: engine.execute_to_df(q, now_nanos=NOW))
+        assert jobs == 0
+        assert df.toArrow().equals(engine.execute_to_arrow(q, now_nanos=NOW)[0])
 
 
 class TestProjection:
@@ -211,10 +222,32 @@ class TestMetadataSchemas:
         )
         assert [r["seq"] for r in df.collect()] == [1, 2, 3]
 
-    def test_describe_collects_in_one_job(self, engine):
-        table, plan_jobs, collect_jobs, _ = _serve(engine, "select * from .describe")
-        assert (plan_jobs, collect_jobs) == (0, 1)
+    def test_describe_runs_no_spark_job(self, engine):
+        table, jobs = _arrow(engine, "select * from .describe")
+        assert jobs == 0
         assert table.to_pylist()[0]["block_num"] == 3
+
+    def test_describe_reads_one_manifest_snapshot(self, engine, tmp_ctx):
+        """Under `use_cache = true` `block_num`, `from` and `end` come
+        from the one cached manifest, also when another process
+        rewrites the manifest between two describes."""
+        q = "with use_cache = true select * from .describe"
+        first = engine.execute_to_arrow(q, now_nanos=NOW)[0].to_pylist()[0]
+        path = os.path.join(tmp_ctx.db_dir(None), "blocklist", "m.json")
+        with open(path) as f:
+            doc = json.load(f)
+        doc["blocks"] = doc["blocks"][:1]  # out of band: one block left
+        with open(path, "w") as f:
+            json.dump(doc, f)
+        again = engine.execute_to_arrow(q, now_nanos=NOW)[0].to_pylist()[0]
+        assert {k: again[k] for k in ("block_num", "from", "end")} == {
+            "block_num": 3,
+            "from": _ts(0) // NANOS_PER_SEC,
+            "end": _ts(149) // NANOS_PER_SEC,
+        }
+        assert {k: first[k] for k in ("block_num", "from", "end")} == {
+            k: again[k] for k in ("block_num", "from", "end")
+        }
 
 
 class TestArrowAtTheBoundary:

@@ -106,6 +106,23 @@ class TestFunctions:
         assert out["rt"] == base
         assert out["b"] == nanos(2024, 1, 1)
 
+    def test_ts_to_timestamp_floors_to_the_microsecond(self, spark):
+        """1 ns before midnight stays in its day, and 1 ns before the
+        epoch floors to -1 us (a double division rounded the first up
+        to midnight and a cast truncated the second to 0)."""
+        mid = nanos(2024, 1, 1)
+        df = spark.createDataFrame([(mid - 1,), (mid,), (-1,)], "ts long")
+        t = zf.ts_to_timestamp(F.col("ts"))
+        got = [
+            (r["us"], r["day"])
+            for r in df.select(F.unix_micros(t).alias("us"), F.to_date(t).cast("string").alias("day")).collect()
+        ]
+        assert got == [
+            (mid // 1000 - 1, "2023-12-31"),
+            (mid // 1000, "2024-01-01"),
+            (-1, "1969-12-31"),
+        ]
+
     def test_cosine(self, spark):
         df = spark.createDataFrame([([1.0, 0.0], [0.6, 0.8])], ["a", "b"])
         got = df.select(zf.cosine(F.col("a"), F.col("b")).alias("c")).collect()[0]["c"]

@@ -84,6 +84,49 @@ def test_sessions_close_by_gap_and_watermark(spark, tmp_path):
     assert len(rows) == 2
 
 
+def test_watermark_floors_a_ts_1ns_before_a_window_boundary(spark, tmp_path):
+    """The event-time column floors nanos to the microsecond. User 2's
+    session times out once the watermark passes T ms; an event 1 ns
+    before the boundary T+1 ms holds the watermark at T and the session
+    stays open (rounded up onto the boundary, it closed the session a
+    batch early); the event at the boundary closes it."""
+    base = nanos(2024, 1, 1)
+    gap = 60 * NANOS_PER_SEC
+    timeout_ms = (base + 5 * NANOS_PER_SEC) // 1_000_000 + gap // 1_000_000
+    boundary = (timeout_ms + 1) * 1_000_000
+    _write_flat(spark, tmp_path, "b1", [(base + 5 * NANOS_PER_SEC, 2)])
+    src = _write_flat(spark, tmp_path, "b2", [(boundary - 1, 1)])
+
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        stateful_sessionize(stream, gap_nanos=gap)
+        .writeStream.format("memory")
+        .queryName("boundary_sessions")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+
+    def closed():
+        return {
+            r["user_id"]: r["closed_by"]
+            for r in spark.sql("select * from boundary_sessions").collect()
+        }
+
+    try:
+        q.processAllAvailable()
+        assert closed() == {}
+        _write_flat(spark, tmp_path, "b3", [(boundary, 1)])
+        q.processAllAvailable()
+        assert closed() == {2: "timeout"}
+    finally:
+        q.stop()
+
+
 def test_streaming_dedup_first_seen_with_ttl(spark, tmp_path):
     from zikeiretsu_rs_spark.streaming.stateful import stateful_dedup_first_seen
 

@@ -11,7 +11,8 @@ Reference mapping (SURVEY.md §1.5):
   positional `f0..fn` with `ts` first.
 - Blocks are partitioned by `dt`, the UTC day of `ts`. `day_key` and
   `day_key_sql` are the one definition of that key, for writers and
-  readers alike.
+  readers alike; `nanos_to_timestamp` floors `ts` to a microsecond
+  TimestampType the same exact way.
 """
 
 from __future__ import annotations
@@ -113,6 +114,18 @@ def day_key_sql(ts: str) -> str:
     fraction of a microsecond before midnight into the next day."""
     days = f"(({ts}) - pmod({ts}, {NANOS_PER_DAY}L)) div {NANOS_PER_DAY}L"
     return f"CAST(date_from_unix_date({days}) AS STRING)"
+
+
+def nanos_to_timestamp(ts):
+    """Microsecond TimestampType Column of the long nanos Column `ts`,
+    floored to its microsecond: (ts - pmod(ts, 1000)) div 1000 is exact
+    integer math, where a double division rounds a ts within about
+    0.25 us of the next microsecond up (1 ns before midnight would read
+    as midnight) and a cast truncates pre-epoch values toward zero."""
+    from pyspark.sql import functions as F
+
+    micros = F.call_function("div", ts - F.pmod(ts, F.lit(1000)), F.lit(1000))
+    return F.timestamp_micros(micros)
 
 
 def nanos_spine_expr(col, dtype: str):

@@ -72,10 +72,17 @@ class Engine:
     def execute_to_arrow(
         self, query: str, now_nanos: int | None = None
     ) -> tuple[pa.Table, InterpretedQuery]:
-        """Run a dialect query and collect its answer as an Arrow table,
-        with the interpreted query (for its output condition). Collected
-        straight from Spark's Arrow batches: a pandas hop would turn a
-        nullable long column into float64. The Flight server answers
-        from this."""
-        df, iq = self._executor.execute_to_df(query, now_nanos)
-        return df.toArrow(), iq
+        """Run a dialect query and return its answer as an Arrow table,
+        with the interpreted query (for its output condition). An answer
+        the manifest sizes within the one-task rule is read from the
+        blocks with pyarrow and runs no Spark job; a larger one is
+        collected straight from Spark's Arrow batches under
+        `spark_lock` (a pandas hop would turn a nullable long column
+        into float64). The Flight server answers from this."""
+        return self._executor.execute_to_arrow(query, now_nanos)
+
+    @property
+    def spark_lock(self):
+        """The lock Spark work of concurrent `execute_to_arrow` callers
+        queues on."""
+        return self._executor.spark_lock

@@ -37,7 +37,6 @@ behaves exactly like the reference.
 from __future__ import annotations
 
 import json
-import threading
 
 import pyarrow as pa
 
@@ -75,10 +74,10 @@ if FLIGHT_AVAILABLE:
         def __init__(self, engine: Engine, location: str = "grpc://127.0.0.1:0"):
             super().__init__(location)
             self.engine = engine
-            # serialize Spark actions: a SparkSession is driver-side
-            # shared state; concurrent do_get calls queue here, just
-            # like the reference's single DB handle behind its service
-            self._lock = threading.Lock()
+            # Spark work is serialized on the engine's lock: a
+            # SparkSession is driver-side shared state. A small answer
+            # is read from the blocks with pyarrow and never waits on it
+            self._lock = engine.spark_lock
 
         def do_get(self, context, ticket):
             raw = ticket.ticket
@@ -93,8 +92,7 @@ if FLIGHT_AVAILABLE:
             except (ValueError, UnicodeDecodeError):
                 query = raw.decode("utf-8", errors="replace")
             try:
-                with self._lock:
-                    table, iq = self.engine.execute_to_arrow(query, now_nanos)
+                table, iq = self.engine.execute_to_arrow(query, now_nanos)
             except ZikeiretsuError as e:  # the client's query
                 # pyarrow maps ArrowInvalid raised in a handler to the
                 # gRPC INVALID_ARGUMENT status (Status::invalid_argument

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..datamodel import nanos_to_timestamp
 from ..operators.similarity import _dot as vec_dot  # noqa: F401
 from ..operators.similarity import _norm as vec_norm  # noqa: F401
 from ..operators.text import words_col  # noqa: F401
@@ -28,9 +29,9 @@ def ts_bucket(ts: Column, width_nanos: int) -> Column:
 
 def ts_to_timestamp(ts: Column) -> Column:
     """Microsecond-precision TimestampType view of the nano spine (for
-    display / interop; sub-µs bits are truncated — the long column
-    stays the source of truth)."""
-    return F.timestamp_micros((ts / 1000).cast("long"))
+    display / interop; sub-µs bits are floored, so 1 ns before midnight
+    stays in its day — the long column stays the source of truth)."""
+    return nanos_to_timestamp(ts)
 
 
 def timestamp_to_ts(t: Column) -> Column:

@@ -1,11 +1,23 @@
-"""Executor: dispatch InterpretedQuery -> DataFrame (+ output routing).
+"""Executor: dispatch InterpretedQuery -> answer (+ output routing).
 
 Reference: query/executor/mod.rs:34-120 (dispatch),
 metrics_list.rs:6-19 (.metrics), describe_metrics.rs:9-158
 (.describe/.block_list), search_metrics.rs:8-30 (data queries).
+
+An answer is a pyarrow Table built on the driver with no Spark job:
+every metadata answer, and every data answer the manifest sizes within
+the translator's one-task rule (`translator.arrow_search`). A larger
+data answer is a distributed Spark DataFrame (`translate_search`).
+`execute_to_arrow` collects either as a Table; `run` / `execute_to_df`
+wrap a Table with `createDataFrame`, which runs no job. On the
+`execute_to_arrow` path Spark work (the distributed plan's threshold
+job and its collect) takes `spark_lock`, so concurrent callers queue
+for Spark only.
 """
 
 from __future__ import annotations
+
+import threading
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +36,7 @@ from .analyzer import (
 )
 from .output import write_output
 from .parser import parse_query
-from .translator import translate_search
+from .translator import arrow_search, plan_search, translate_search
 
 
 _METRICS_SCHEMA = pa.schema([("metrics", pa.string())])
@@ -45,23 +57,48 @@ class QueryExecutor:
     def __init__(self, spark: SparkSession, ctx: DBContext):
         self.spark = spark
         self.ctx = ctx
+        # a SparkSession is driver-side shared state: Spark work of
+        # concurrent callers queues here, Arrow answers take no lock
+        self.spark_lock = threading.Lock()
 
     # -- public API ----------------------------------------------------
     def execute(self, query: str, now_nanos: int | None = None):
         """Parse, analyze, run and route a query. Returns whatever the
         output condition dictates (rendered string / DataFrame / None)."""
-        df, iq = self.execute_to_df(query, now_nanos)
-        return write_output(df, iq.output_condition)
+        iq = self._interpret(query, now_nanos)
+        return write_output(self.spark, self.answer(iq), iq.output_condition)
 
     def execute_to_df(
         self, query: str, now_nanos: int | None = None
     ) -> tuple[DataFrame, InterpretedQuery]:
-        parsed = parse_query(query)
-        iq = interpret(parsed, now_nanos if now_nanos is not None else now_utc_nanos())
+        iq = self._interpret(query, now_nanos)
         return self.run(iq), iq
+
+    def execute_to_arrow(
+        self, query: str, now_nanos: int | None = None
+    ) -> tuple[pa.Table, InterpretedQuery]:
+        iq = self._interpret(query, now_nanos)
+        answer = self.answer(iq)
+        if isinstance(answer, DataFrame):
+            with self.spark_lock:
+                answer = answer.toArrow()
+        return answer, iq
+
+    @staticmethod
+    def _interpret(query: str, now_nanos: int | None) -> InterpretedQuery:
+        parsed = parse_query(query)
+        return interpret(parsed, now_nanos if now_nanos is not None else now_utc_nanos())
 
     # -- dispatch ------------------------------------------------------
     def run(self, iq: InterpretedQuery) -> DataFrame:
+        answer = self.answer(iq)
+        if isinstance(answer, pa.Table):
+            return self.spark.createDataFrame(answer)
+        return answer
+
+    def answer(self, iq: InterpretedQuery) -> pa.Table | DataFrame:
+        """The Arrow table of `iq`'s answer, or the Spark DataFrame of a
+        data answer too large for the driver."""
         if isinstance(iq, ListMetricsQuery):
             return self._list_metrics(iq)
         if isinstance(iq, DescribeMetricsQuery):
@@ -70,19 +107,16 @@ class QueryExecutor:
         return self._search(iq)
 
     # -- builtin metadata queries -------------------------------------
-    def _frame(self, rows: list[tuple], schema: pa.Schema) -> DataFrame:
-        """Metadata answers are built from Arrow: a DataFrame made from
-        Python tuples needs a Python-worker job to decode them, one made
-        from an Arrow table does not."""
-        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
-        return self.spark.createDataFrame(table)
+    @staticmethod
+    def _frame(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+        return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
 
-    def _list_metrics(self, iq: ListMetricsQuery) -> DataFrame:
+    def _list_metrics(self, iq: ListMetricsQuery) -> pa.Table:
         """.metrics: one String column (metrics_list.rs:6-19)."""
         names = Manifest.list_metrics(self.ctx.db_dir(iq.database))
         return self._frame([(n,) for n in names], _METRICS_SCHEMA)
 
-    def _describe(self, iq: DescribeMetricsQuery) -> DataFrame:
+    def _describe(self, iq: DescribeMetricsQuery) -> pa.Table:
         """.describe / .block_list from the manifest
         (describes_to_dataframe{,_with_block_list},
         describe_metrics.rs:72-158). `updated_at` is epoch nanos,
@@ -114,23 +148,28 @@ class QueryExecutor:
             return self._frame(rows, _BLOCK_LIST_SCHEMA)
         for name in names:
             m = Manifest(db_dir, name)
+            # block_num, from and end all come from this one snapshot
             entries = m.load(use_cache=iq.setting.use_cache)
-            rng = m.range()
             rows.append(
                 (
                     name,
                     m.updated_at_nanos(),
                     len(entries),
-                    (rng[0] // NANOS_PER_SEC) if rng else 0,
-                    (rng[1] // NANOS_PER_SEC) if rng else 0,
+                    min((e.since_nanos for e in entries), default=0) // NANOS_PER_SEC,
+                    max((e.until_nanos for e in entries), default=0) // NANOS_PER_SEC,
                 )
             )
         return self._frame(rows, _DESCRIBE_SCHEMA)
 
     # -- data queries --------------------------------------------------
-    def _search(self, iq: SearchMetricsQuery) -> DataFrame:
+    def _search(self, iq: SearchMetricsQuery) -> pa.Table | DataFrame:
         db_dir = self.ctx.db_dir(iq.database)
         field_types = SchemaRegistry(db_dir).load(iq.metrics)
         if field_types is None:
             raise StorageError(f"metrics not found: {iq.metrics}")
-        return translate_search(self.spark, db_dir, iq, field_types)
+        plan = plan_search(db_dir, iq, field_types)
+        table = arrow_search(self.spark, plan)
+        if table is not None:
+            return table
+        with self.spark_lock:
+            return translate_search(self.spark, plan)

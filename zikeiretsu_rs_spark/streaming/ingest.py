@@ -282,8 +282,9 @@ def streaming_time_bucket(
     """Watermarked tumbling-window aggregation over an event-time
     column. `ts_col` must be TimestampType here (Structured Streaming
     watermarks require it); callers with a nano-long spine derive it
-    with `F.timestamp_micros(ts / 1000)` — sub-microsecond precision is
-    not meaningful for windowing."""
+    with `datamodel.nanos_to_timestamp(ts)`, which floors to the
+    microsecond — sub-microsecond precision is not meaningful for
+    windowing."""
     aggs = [F.count("*").alias("n")]
     if value_col is not None:
         aggs.append(

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..datamodel import nanos_to_timestamp
+
 SESSION_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -132,7 +134,7 @@ def stateful_sessionize(
     derived event-time column.
     """
     with_et = stream_df.select(user_col, "ts").withColumn(
-        "_et", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
+        "_et", nanos_to_timestamp(F.col("ts"))
     )
     return (
         with_et.withWatermark("_et", watermark)
@@ -223,7 +225,7 @@ def stateful_dedup_first_seen(
     """
     with_et = stream_df.select(
         F.col(fingerprint_col).alias("fingerprint"), "ts"
-    ).withColumn("_et", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
+    ).withColumn("_et", nanos_to_timestamp(F.col("ts")))
     return (
         with_et.withWatermark("_et", "0 seconds")
         .groupBy("fingerprint")
